@@ -84,17 +84,9 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 
-  /** Typed variants, for callers who want compile-time field checks. */
-  def lineitemDs(spark: SparkSession, dir: String): Dataset[model.Lineitem] = {
-    import spark.implicits._
-    lineitem(spark, dir).as[model.Lineitem]
-  }
+  /** Typed variant, for callers who want compile-time field checks. */
   def eventsDs(spark: SparkSession, dir: String): Dataset[model.Event] = {
     import spark.implicits._
     events(spark, dir).as[model.Event]
-  }
-  def documentsDs(spark: SparkSession, dir: String): Dataset[model.Document] = {
-    import spark.implicits._
-    documents(spark, dir).as[model.Document]
   }
 }

@@ -40,27 +40,10 @@ object TextFunctions {
   val StopFr = Seq("le", "la", "les", "et", "un")
   val StopEs = Seq("el", "los", "las", "y", "una")
 
-  /** Distinct character trigrams of a string (n-gram Jaccard basis). */
-  def charTrigrams(text: Column): Column =
-    array_distinct(
-      transform(
-        sequence(lit(1), greatest(length(text) - 2, lit(1))),
-        i => text.substr(i, lit(3))))
-
   /** Jaccard similarity of two distinct-element arrays. */
   def jaccard(a: Column, b: Column): Column =
     size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
 
   /** Normalized-content md5 fingerprint. */
   def fingerprint(text: Column): Column = md5(lower(trim(text)))
-
-  /** 3-word shingles (whole text as one shingle for short docs). */
-  def wordShingles(text: Column): Column = {
-    val toks = split(lower(trim(text)), " ")
-    when(size(toks) < 3, array(concat_ws(" ", toks)))
-      .otherwise(
-        transform(
-          sequence(lit(1), size(toks) - 2),
-          i => concat_ws(" ", slice(toks, i, lit(3)))))
-  }
 }

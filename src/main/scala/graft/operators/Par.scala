@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 
 /** Scan fan-out for compute-heavy per-row stages.
   *
@@ -25,10 +25,5 @@ object Par {
   def fanOut(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
-  def fanOutDs[T](ds: Dataset[T]): Dataset[T] = {
-    val target = ds.sparkSession.sparkContext.defaultParallelism
-    if (ds.rdd.getNumPartitions < target) ds.repartition(target) else ds
   }
 }

@@ -706,21 +706,15 @@ object GraftLake {
   def overwritePartitionsDynamic(
       spark: SparkSession, df: DataFrame, path: String,
       statsCols: Seq[String] = Seq.empty): (Int, Int, Int) = {
-    val s = snapshot(path)
-    require(s.version >= 0, s"no table at $path")
+    val d = openDml(spark, path, refuseTombstones = Some("compact first"))
+    import d.{s, target}
     val pcs = partitionColumnsOf(path)
     require(pcs.nonEmpty,
       s"dynamic partition overwrite: no partition layout recorded at $path")
-    require(s.tombstones.isEmpty,
-      s"outstanding merge-on-read tombstones at $path: compact first")
     val cons = s.constraints
-    val target = StructType.fromDDL(s.schemaDdl)
     pcs.foreach(pc => require(df.columns.contains(pc),
       s"dynamic partition overwrite: input has no '$pc' column"))
-    val aligned = df.select(target.fields.toIndexedSeq.map { f =>
-      if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
+    val aligned = alignTo(df, target, cast = true)
     // ONE grouped pass over the input answers everything the commit
     // needs beyond the write itself: the incoming partition value
     // TUPLES (O(partitions) driver rows by layout design), the
@@ -753,13 +747,10 @@ object GraftLake {
         s"overlap incoming ${pcs.mkString("(", ", ", ")")} values without " +
         "an exact per-partition manifest — run compactPartitioned to " +
         "restore the layout first")
-    val cdfSet =
-      if (!cdfEnabled(path)) None
-      else {
-        val old = victims.map(readSet(spark, path, _, target, s.renames))
-          .reduceLeftOption(_.unionByName(_))
-        stageCdf(path, old.map(_ -> "delete").toSeq :+ (aligned -> "insert"))
-      }
+    val cdfSet = stageCdf(path,
+      victims.map(readSet(spark, path, _, target, s.renames))
+        .reduceLeftOption(_.unionByName(_)).map(_ -> "delete").toSeq :+
+        (aligned -> "insert"))
     val perSet = stagePartitionedMulti(aligned, path, pcs,
       probeStats, Some(extraPre))
     val flat = pcs.map(pc => SetStats(pc,
@@ -1837,12 +1828,6 @@ object GraftLake {
       addColumns(path, newCols.map(f => f.name -> f.dataType).toSeq)
   }
 
-  /** Stage a CDF sidecar set (when enabled): `rows` + a constant
-    * `_change_type`, written under `cdf/` — OUTSIDE the data dir, so
-    * vacuum's live-set sweep never touches it and it never joins the
-    * snapshot's live list. Returns the set name to record in the
-    * commit, or None when the feed is off or `rows` is empty-typed.
-    */
   /** Stage a positional-DV sidecar set WITH its `_dv_targets.json`
     * manifest: the distinct target sets ride the write job itself via
     * observe (zero extra passes), so MoR readers can skip sidecars
@@ -1863,8 +1848,15 @@ object GraftLake {
     MorMasks.writeTargetsManifest(setPath(path, setName), targets)
   }
 
+  /** Stage a CDF sidecar set (when enabled): `parts` + a constant
+    * `_change_type`, written under `cdf/` — OUTSIDE the data dir, so
+    * vacuum's live-set sweep never touches it and it never joins the
+    * snapshot's live list. Returns the set name to record in the
+    * commit, or None when the feed is off (`parts` is then never
+    * evaluated, so a caller's image-building jobs never run).
+    */
   private def stageCdf(
-      path: String, parts: Seq[(DataFrame, String)]): Option[String] = {
+      path: String, parts: => Seq[(DataFrame, String)]): Option[String] = {
     if (!cdfEnabled(path)) return None
     val typed = parts.map { case (df, ct) =>
       df.withColumn("_change_type", lit(ct))
@@ -4256,6 +4248,322 @@ object GraftLake {
         .withColumn("_commit_version", lit(0)))
   }
 
+  // --------------------------------------------------------- DML pipeline
+  //
+  // Every row-level mutation is ONE pipeline: a front end (snapshot,
+  // manifest pruning), the entry point's match, and one of two
+  // materializers — a COPY-ON-WRITE rewrite ([[cowRewrite]]) or a
+  // DELETION-VECTOR sidecar ([[dvCommit]], [[dvTombstone]]).
+
+  /** The snapshot a DML statement runs against, its schema, and
+    * `replayed`: the version an exactly-once tag already landed at,
+    * which the caller returns without doing any work (the publish
+    * loop re-checks under contention, so racing same-tag calls land
+    * exactly once).
+    */
+  private final case class DmlScope(
+      spark: SparkSession, path: String, s: Snapshot, target: StructType,
+      replayed: Option[Int])
+
+  /** The tombstone refusal of the copy-on-write rewrites. */
+  private val CompactFirst =
+    "compact first (a raw file-set rewrite would resurrect tombstoned rows)"
+
+  /** Front end: resolve the snapshot and the `tag` replay; copy-on-
+    * write paths (which read set bytes, not visible rows) refuse while
+    * merge-on-read tombstones are outstanding, naming the way out.
+    */
+  private def openDml(
+      spark: SparkSession, path: String, tag: Option[String] = None,
+      refuseTombstones: Option[String] = None): DmlScope = {
+    val s = snapshot(path)
+    require(s.version >= 0, s"no table at $path")
+    val replayed = tag.flatMap(s.tags.get)
+    if (replayed.isEmpty) refuseTombstones.foreach(way =>
+      require(s.tombstones.isEmpty,
+        s"outstanding merge-on-read tombstones at $path: $way"))
+    DmlScope(spark, path, s, StructType.fromDDL(s.schemaDdl), replayed)
+  }
+
+  /** A mutation source's row count, non-NULL key count and key span in
+    * the zone maps' long image ([[statLongExpr]]).
+    */
+  private final case class KeySpan(
+      rows: Long, nonNull: Long, span: Option[(Long, Long)]) {
+    /** The span, when every source row carries a key. */
+    def complete: Option[(Long, Long)] = span.filter(_ => nonNull == rows)
+  }
+
+  /** Front end: the key-span probe, ONE delta-sized aggregate, in two
+    * postures. `refuseNulls` (merge/mergeDv) names the caller and fails
+    * loudly on a NULL key, which escapes the overlap test (SetStats
+    * min/max ignore NULLs): an insert row would be silently dropped, an
+    * update could miss a matched target in a pruned set. Otherwise a
+    * span is taken only for a present, prunable `c` (a raw cast can
+    * invert or, under ANSI, throw) and callers full-scan without one.
+    */
+  private def keySpan(
+      src: DataFrame, c: String, refuseNulls: Option[String] = None): KeySpan = {
+    val present = src.columns.contains(c)
+    val (lo, hi) =
+      if (refuseNulls.isEmpty &&
+          !(present && isPrunableType(src.schema(c).dataType)))
+        (lit(null).cast("long"), lit(null).cast("long"))
+      else {
+        val e = statLongExpr(src.schema(c).dataType, col(c))
+        (functions.min(e), functions.max(e))
+      }
+    val r = src.agg(functions.count(lit(1)),
+      if (present) functions.count(col(c)) else lit(0L), lo, hi).head
+    val ks = KeySpan(r.getLong(0), r.getLong(1),
+      if (r.isNullAt(2) || r.isNullAt(3)) None
+      else Some((r.getLong(2), r.getLong(3))))
+    refuseNulls.filter(_ => ks.rows > 0L).foreach(who =>
+      require(ks.nonNull == ks.rows,
+        s"$who updates contain NULL '$c' values " +
+          s"(${ks.rows - ks.nonNull} of ${ks.rows} rows); " +
+          "the zone-map overlap test cannot prune soundly with NULL keys"))
+    ks
+  }
+
+  /** Front end: (sets that may hold a match, sets that provably hold
+    * none) — zone maps answer `ranges`, Bloom sidecars `eqs`.
+    */
+  private def pruneSets(
+      path: String, live: Seq[LiveSet], ranges: Seq[(String, Long, Long)],
+      eqs: Seq[(String, Seq[Long])] = Seq.empty): (Seq[LiveSet], Seq[LiveSet]) =
+    if (ranges.isEmpty && eqs.isEmpty) (live, Seq.empty)
+    else live.partition(setMayMatch(path, _, ranges, eqs))
+
+  /** Front end: the copy-on-write victim search off the constraints a
+    * predicate implies (plus the caller's `ranges`), so a plain
+    * predicate on a laid-out or bloom-indexed column prunes with zero
+    * hints. Records [[lastCowScanSets]].
+    */
+  private def cowCandidates(
+      d: DmlScope, predicate: Column,
+      ranges: Seq[(String, Long, Long)] = Seq.empty): (Seq[LiveSet], Seq[LiveSet]) = {
+    val (pRanges, pEqs) = predicateConstraints(predicate, d.target, d.s.generated)
+    val (scan, skip) = pruneSets(d.path, d.s.live, ranges ++ pRanges, pEqs)
+    _lastCowScanSets.set((scan.size, skip.size))
+    (scan, skip)
+  }
+
+  /** Front end: `df` projected onto `target` by name, NULL-filling. */
+  private def alignTo(
+      df: DataFrame, target: StructType, cast: Boolean = false): DataFrame =
+    df.select(target.fields.toIndexedSeq.map { f =>
+      if (!df.columns.contains(f.name)) lit(null).cast(f.dataType).as(f.name)
+      else if (cast) col(f.name).cast(f.dataType).as(f.name)
+      else col(f.name)
+    }: _*)
+
+  /** [[alignTo]] for a merge source, refusing unknown columns. */
+  private def alignUpdates(
+      updates: DataFrame, target: StructType, who: String): DataFrame = {
+    val targetNames = target.fieldNames.toSet
+    require(updates.columns.forall(targetNames),
+      s"$who updates carry unknown columns: " +
+        s"${updates.columns.filterNot(targetNames).mkString(", ")}")
+    alignTo(updates, target)
+  }
+
+  /** UPDATE assignments: distinct existing target columns. */
+  private def requireAssignments(
+      d: DmlScope, sets: Seq[(String, Column)]): Unit = {
+    require(sets.nonEmpty, "UPDATE with no assignments")
+    sets.foreach(a => require(d.target.fieldNames.contains(a._1),
+      s"UPDATE: no column '${a._1}' at ${d.path}"))
+    require(sets.map(_._1).distinct.size == sets.size,
+      "UPDATE: duplicate assignment targets")
+  }
+
+  /** UPDATE post-image, applied where `guard` holds: every right-hand
+    * side reads the input row (`SET a = b, b = a` swaps rather than
+    * cascading).
+    */
+  private def postImage(
+      target: StructType, sets: Seq[(String, Column)],
+      guard: Option[Column] = None): IndexedSeq[Column] =
+    target.fields.toIndexedSeq.map { f =>
+      sets.find(_._1 == f.name) match {
+        case Some((_, v)) => guard.fold(v.cast(f.dataType))(g =>
+          when(g, v.cast(f.dataType)).otherwise(col(f.name))).as(f.name)
+        case None => col(f.name).as(f.name)
+      }
+    }
+
+  /** Copy-on-write materializer: `rewritten` replaces the `hit` sets,
+    * re-recording their stats dimensions (plus `statsCols`) and Bloom
+    * sidecars so pruning survives; a racing writer that touched a hit
+    * set aborts the commit (ConcurrentModificationException), never a
+    * lost update.
+    */
+  private def cowRewrite(
+      d: DmlScope, action: String, rewritten: DataFrame, hit: Seq[LiveSet],
+      statsCols: Seq[String], cdfSet: Option[String] = None,
+      tag: Option[String] = None): Int = {
+    val hitNames = hit.map(_.set)
+    commit(rewritten, d.path, action, tag = tag,
+      statsCols = reRecordable(d.target, d.s.renames,
+        hit.flatMap(_.stats.map(_.col)) ++ statsCols),
+      removeSets = hitNames,
+      bloomCols = reRecordable(d.target, d.s.renames,
+        bloomColsOf(d.path, hitNames)),
+      cdfSet = cdfSet,
+      fence = fenceFor(d.spark, d.path, hitNames.toSet, d.s.tombstones))
+  }
+
+  /** Copy-on-write predicate mutation — DELETE (`sets` None) and
+    * UPDATE are one algorithm. ONE distributed pass over the
+    * [[cowCandidates]] yields per-set match counts: CDF tables fuse it
+    * INTO the sidecar write (guide §1.2), staging the change images
+    * (update pre + post exploded, so rows are read once) partitioned by
+    * candidate index and reading the counts off the staged footers;
+    * other tables run one count job, a delete's with set totals. The
+    * hit sets then rewrite — except when a delete empties every one:
+    * they drop BY REFERENCE, leaving no stat-less empty set to scan in
+    * every later pruned mutation (totals of a CDF delete come from the
+    * `_ridmap` metadata; tombstones are refused, so recorded ==
+    * visible). A NULL predicate never matches. Returns (version,
+    * rewrittenSets, keptSets, matchedRows); no hit commits nothing.
+    */
+  private def cowPredicateMutation(
+      spark: SparkSession, path: String, predicate: Column,
+      statsCol: Option[String], ranges: Seq[(String, Long, Long)],
+      sets: Option[Seq[(String, Column)]]): (Int, Int, Int, Long) = {
+    val d = openDml(spark, path, refuseTombstones = Some(CompactFirst))
+    sets.foreach(requireAssignments(d, _))
+    import d.{s, target}
+    val live = s.live
+    val pred = coalesce(predicate, lit(false))
+    val (candidates, _) = cowCandidates(d, predicate, ranges)
+    if (candidates.isEmpty) return (s.version, 0, live.size, 0L)
+    val tagged = readSetsBulk(spark, path, candidates, target, s.renames,
+      tagCol = true).get
+    val (matchCounts, totOf, cdfSet): (Map[String, Long], String => Long,
+        Option[String]) =
+      if (!cdfEnabled(path)) {
+        val counted =
+          if (sets.isEmpty) tagged.groupBy(col("__set")).agg(
+            functions.count(lit(1)).as("tot"),
+            coalesce(functions.sum(when(pred, 1L).otherwise(0L)), lit(0L))
+              .as("n"))
+          else tagged.filter(pred).groupBy(col("__set"))
+            .agg(functions.count(lit(1)).as("n"))
+        val counts = counted.collect()
+          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(r.length - 1)))
+          .toMap
+        (counts.map { case (k, (_, n)) => k -> n },
+          (set: String) => counts(set)._1, None)
+      } else {
+        val setName = s"cdf/c${java.util.UUID.randomUUID().toString.take(12)}"
+        val stage = Paths.get(path,
+          s"_stage_c${java.util.UUID.randomUUID().toString.take(12)}")
+        val images: Seq[(Seq[Column], String)] = sets match {
+          case None => Seq((target.fieldNames.toIndexedSeq.map(col), "delete"))
+          case Some(a) => Seq(
+            (target.fields.toIndexedSeq.map(f => col(f.name).as(f.name)),
+              "update_preimage"),
+            (postImage(target, a), "update_postimage"))
+        }
+        val si = setIndexCol(candidates).as("__si")
+        def typed(cols: Seq[Column], ct: String): Seq[Column] =
+          cols :+ lit(ct).as("_change_type")
+        (images match {
+          case Seq((cols, ct)) =>
+            tagged.filter(pred).select(si +: typed(cols, ct): _*)
+          case _ =>
+            tagged.filter(pred)
+              .select(si, functions.explode(functions.array(images.map {
+                case (cols, ct) => functions.struct(typed(cols, ct): _*)
+              }: _*)).as("__r"))
+              .select(col("__si"), col("__r.*"))
+        }).write.partitionBy("__si").parquet(stage.toString)
+        val perIdx = flattenStagedCdf(stage, Paths.get(setPath(path, setName)))
+        val mc = perIdx.map { case (i, n) => candidates(i).set -> n / images.size }
+        if (!mc.values.exists(_ > 0L)) reclaimStaged(path, setName) // no-hit: no commit
+        (mc,
+          (set: String) => setRecordCountFromSidecar(path, set)
+            .getOrElse(setRecordCountFromFooters(path, set)),
+          Some(setName))
+      }
+    val hitSets = candidates.filter(ls => matchCounts.getOrElse(ls.set, 0L) > 0)
+    val matched = matchCounts.values.sum
+    if (hitSets.isEmpty) return (s.version, 0, live.size, 0L)
+    if (sets.isEmpty && hitSets.forall(ls => totOf(ls.set) == matchCounts(ls.set))) {
+      val v = publishEntry(path, "delete", "", new StructType(), None,
+        Seq.empty, hitSets.map(_.set), cdfSet = cdfSet,
+        fence = fenceFor(spark, path, hitSets.map(_.set).toSet,
+          s.tombstones))
+      return (v, hitSets.size, live.size - hitSets.size, matched)
+    }
+    val hitDf = readSetsBulk(spark, path, hitSets, target, s.renames).get
+    val v = sets match {
+      case None =>
+        cowRewrite(d, "delete", hitDf.filter(!pred), hitSets, statsCol.toSeq,
+          cdfSet)
+      case Some(a) => cowRewrite(d, "update",
+        hitDf.select(postImage(target, a, Some(pred)): _*), hitSets,
+        statsCol.toSeq, cdfSet)
+    }
+    (v, hitSets.size, live.size - hitSets.size, matched)
+  }
+
+  /** Deletion-vector front: the VISIBLE rows matching `predicate`, with
+    * positions, checkpointed with their count; None when none match.
+    */
+  private def dvMatches(d: DmlScope, predicate: Column): Option[(DataFrame, Long)] =
+    visibleWithPositions(d.spark, d.path, d.s,
+      predicateConstraints(predicate, d.target, d.s.generated))
+      .map(v => checkpointWithCount(v.filter(coalesce(predicate, lit(false)))))
+      .filter(_._2 > 0L)
+
+  /** Deletion-vector materializer: ONE atomic `updatedv` commit of a
+    * position sidecar masking `masked` (old images' positions) and one
+    * appended set of `appended` rows — readers see neither or both.
+    * CHECK and stats ride the append's write ([[stageSet]]); a
+    * violation also reclaims the staged sidecar. Positions bind to
+    * THIS snapshot: a concurrent commit aborts with
+    * ConcurrentModificationException (re-run to re-resolve).
+    */
+  private def dvCommit(
+      d: DmlScope, masked: DataFrame, appended: DataFrame,
+      statsCols: Seq[String], tag: Option[String],
+      cdf: => Seq[(DataFrame, String)]): Int = {
+    val cons = d.s.constraints
+    val dvName = s"data/c${java.util.UUID.randomUUID().toString.take(12)}"
+    stageDvSidecar(masked, d.path, dvName)
+    val dataName = s"data/c${java.util.UUID.randomUUID().toString.take(12)}"
+    val stats =
+      try stageSet(appended, d.path, dataName,
+        reRecordable(d.target, d.s.renames, statsCols), cons)
+      catch { case e: IllegalStateException =>
+        reclaimStaged(d.path, dvName)
+        throw e
+      }
+    val cdfSet = stageCdf(d.path, cdf)
+    publishEntry(d.path, "updatedv", dataName, appended.schema, tag,
+      stats, Seq.empty, Some(cons), cdfSet = cdfSet,
+      expectVersion = Some(d.s.version), dvSidecar = Some(dvName))
+  }
+
+  /** Deletion-vector materializer for pure deletes: a position
+    * tombstone — no data set enters the log. Positions bind to their
+    * sets' layout, so a racing compact/rewrite (or position mask) of
+    * one aborts this commit instead of silently masking nothing.
+    */
+  private def dvTombstone(
+      d: DmlScope, dvRows: DataFrame, tag: Option[String],
+      cdf: => Seq[(DataFrame, String)]): Int = {
+    val cdfSet = stageCdf(d.path, cdf)
+    val refSets = dvRows.select(col("__dv_set")).distinct()
+      .collect().map(_.getString(0)).toSet
+    commit(dvRows.select(DvCols.map(col): _*), d.path, "tombstone",
+      tag = tag, cdfSet = cdfSet,
+      fence = fenceFor(d.spark, d.path, refSets, d.s.tombstones))
+  }
+
   // ---------------------------------------------------------------- merge
 
   /** Copy-on-write MERGE (upsert): rows of `updates` replace target
@@ -4281,51 +4589,14 @@ object GraftLake {
       tag: Option[String] = None,
       autoEvolve: Boolean = false): (Int, Int, Int) = {
     if (autoEvolve) evolveForSource(path, updates)
-    val s = snapshot(path)
-    require(s.version >= 0, s"no table at $path")
-    // EXACTLY-ONCE merges: a tag already in the log means this epoch's
-    // upsert landed — replay is a no-op (the publish loop re-checks
-    // under contention, so racing same-tag merges land exactly once).
-    tag.foreach { t => s.tags.get(t).foreach { v => return (v, 0, 0) } }
-    require(s.tombstones.isEmpty,
-      s"outstanding merge-on-read tombstones at $path: compact first " +
-        "(a raw file-set rewrite would resurrect tombstoned rows)")
-    val target = StructType.fromDDL(s.schemaDdl)
-    val live = s.live
-    // The span probe uses the SAME long image the stats were recorded
-    // under (statLongExpr): integral value / DATE days / TIMESTAMP
-    // micros — a temporal statsCol prunes exactly like an integer one.
-    val spanE = statLongExpr(updates.schema(statsCol).dataType, col(statsCol))
-    val span = updates
-      .agg(org.apache.spark.sql.functions.count(lit(1)),
-        org.apache.spark.sql.functions.count(col(statsCol)),
-        org.apache.spark.sql.functions.min(spanE),
-        org.apache.spark.sql.functions.max(spanE)).head
-    if (span.getLong(0) == 0L) return (s.version, 0, live.size)
-    // A NULL statsCol escapes the overlap test entirely: an insert row
-    // would be silently dropped when the span is all-NULL, and an
-    // update row could miss a matched target hiding in a pruned set
-    // (SetStats min/max ignore NULLs). That's a silent contract
-    // violation — fail loudly instead.
-    require(span.getLong(1) == span.getLong(0),
-      s"merge updates contain NULL '$statsCol' values " +
-        s"(${span.getLong(0) - span.getLong(1)} of ${span.getLong(0)} rows); " +
-        "the zone-map overlap test cannot prune soundly with NULL keys")
-    val (uLo, uHi) = (span.getLong(2), span.getLong(3))
-    val (hit, kept) = live.partition { ls =>
-      ls.statsFor(statsCol) match {
-        case Some(SetStats(_, lo, hi, _, _)) => !(hi < uLo || lo > uHi)
-        case None => true // unknown span — must rewrite
-      }
-    }
-    val targetNames = target.fieldNames.toSet
-    require(updates.columns.forall(targetNames),
-      s"merge updates carry unknown columns: " +
-        s"${updates.columns.filterNot(targetNames).mkString(", ")}")
-    val alignedUpdates = updates.select(target.fields.map { f =>
-      if (updates.columns.contains(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }.toIndexedSeq: _*)
+    val d = openDml(spark, path, tag, refuseTombstones = Some(CompactFirst))
+    d.replayed.foreach(v => return (v, 0, 0))
+    import d.{s, target}
+    val span = keySpan(updates, statsCol, refuseNulls = Some("merge"))
+    if (span.rows == 0L) return (s.version, 0, s.live.size)
+    val (uLo, uHi) = span.span.get
+    val (hit, kept) = pruneSets(path, s.live, Seq((statsCol, uLo, uHi)))
+    val alignedUpdates = alignUpdates(updates, target, "merge")
     val hitDf = hit.map(readSet(spark, path, _, target, s.renames))
       .reduceLeftOption(_.unionByName(_))
     val ukeys = updates.select(keyCols.map(col): _*).distinct()
@@ -4336,36 +4607,24 @@ object GraftLake {
     // unmatched update rows → insert. Staged before the data commit;
     // an abandoned sidecar from a failed commit is unreferenced and
     // harmless (same posture as an unpublished data set).
-    val cdfSet =
-      if (!cdfEnabled(path)) None
-      else {
-        val matchedKeys = hitDf.map(h =>
-          h.select(keyCols.map(col): _*).distinct()
-            .join(ukeys, keyCols, "left_semi").localCheckpoint(true))
-        val none = alignedUpdates.limit(0)
-        val pre = hitDf.map(_.join(ukeys, keyCols, "left_semi")).getOrElse(none)
-        val post = matchedKeys.map(mk =>
-          alignedUpdates.join(mk, keyCols, "left_semi")).getOrElse(none)
-        val ins = matchedKeys.map(mk =>
-          alignedUpdates.join(mk, keyCols, "left_anti")).getOrElse(alignedUpdates)
-        stageCdf(path, Seq((pre, "update_preimage"),
-          (post, "update_postimage"), (ins, "insert")))
-      }
+    val cdfSet = stageCdf(path, {
+      val matchedKeys = hitDf.map(h =>
+        h.select(keyCols.map(col): _*).distinct()
+          .join(ukeys, keyCols, "left_semi").localCheckpoint(true))
+      val none = alignedUpdates.limit(0)
+      val pre = hitDf.map(_.join(ukeys, keyCols, "left_semi")).getOrElse(none)
+      val post = matchedKeys.map(mk =>
+        alignedUpdates.join(mk, keyCols, "left_semi")).getOrElse(none)
+      val ins = matchedKeys.map(mk =>
+        alignedUpdates.join(mk, keyCols, "left_anti")).getOrElse(alignedUpdates)
+      Seq((pre, "update_preimage"), (post, "update_postimage"), (ins, "insert"))
+    })
     val rewritten = hitDf match {
       case None => alignedUpdates
       case Some(h) =>
         h.join(ukeys, keyCols, "left_anti").unionByName(alignedUpdates)
     }
-    // Re-record every stats dimension the rewritten sets carried (plus
-    // the merge key) so multi-column pruning survives the rewrite.
-    val reStats = reRecordable(target, s.renames,
-      hit.flatMap(_.stats.map(_.col)) :+ statsCol)
-    val v = commit(rewritten, path, "merge", tag = tag,
-      statsCols = reStats, removeSets = hit.map(_.set),
-      bloomCols = reRecordable(target, s.renames,
-        bloomColsOf(path, hit.map(_.set))),
-      cdfSet = cdfSet,
-      fence = fenceFor(spark, path, hit.map(_.set).toSet, s.tombstones))
+    val v = cowRewrite(d, "merge", rewritten, hit, Seq(statsCol), cdfSet, tag)
     (v, hit.size, kept.size)
   }
 
@@ -4404,50 +4663,30 @@ object GraftLake {
       tag: Option[String] = None,
       autoEvolve: Boolean = false): (Int, Long, Long) = {
     if (autoEvolve) evolveForSource(path, updates)
-    val s = snapshot(path)
-    require(s.version >= 0, s"no table at $path")
-    tag.foreach { t => s.tags.get(t).foreach { v => return (v, 0L, 0L) } }
-    val target = StructType.fromDDL(s.schemaDdl)
+    val d = openDml(spark, path, tag)
+    d.replayed.foreach(v => return (v, 0L, 0L))
+    import d.{s, target}
     require(keyCols.nonEmpty, "mergeDv with no key columns")
-    // Same long-image convention as the recorded stats (statLongExpr).
-    val spanE = statLongExpr(updates.schema(statsCol).dataType, col(statsCol))
-    val span = updates
-      .agg(org.apache.spark.sql.functions.count(lit(1)),
-        org.apache.spark.sql.functions.count(col(statsCol)),
-        org.apache.spark.sql.functions.min(spanE),
-        org.apache.spark.sql.functions.max(spanE)).head
-    if (span.getLong(0) == 0L) return (s.version, 0L, 0L)
-    require(span.getLong(1) == span.getLong(0),
-      s"mergeDv updates contain NULL '$statsCol' values " +
-        s"(${span.getLong(0) - span.getLong(1)} of ${span.getLong(0)} rows); " +
-        "the zone-map overlap test cannot prune soundly with NULL keys")
-    val targetNames = target.fieldNames.toSet
-    require(updates.columns.forall(targetNames),
-      s"mergeDv updates carry unknown columns: " +
-        s"${updates.columns.filterNot(targetNames).mkString(", ")}")
-    val alignedUpdates = updates.select(target.fields.map { f =>
-      if (updates.columns.contains(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }.toIndexedSeq: _*)
-    val cons = s.constraints
+    val span = keySpan(updates, statsCol, refuseNulls = Some("mergeDv"))
+    if (span.rows == 0L) return (s.version, 0L, 0L)
+    val alignedUpdates = alignUpdates(updates, target, "mergeDv")
     val ukeys = updates.select(keyCols.map(col): _*).distinct()
     // Only span-overlapping sets can hold matched targets (the
     // statsCol contract) — everything else never scans.
+    val (uLo, uHi) = span.span.get
     val visible = visibleWithPositions(spark, path, s,
-      (Seq((statsCol, span.getLong(2), span.getLong(3))), Seq.empty))
+      (Seq((statsCol, uLo, uHi)), Seq.empty))
     // The matched slice, ONE resolution reused everywhere: positions
     // for the sidecar, pre-images for CDF, keys for insert splitting.
-    val matched = visible
+    val (m, nMatched) = visible
       .map(v => checkpointWithCount(v.join(ukeys, keyCols, "left_semi")))
-    val nMatched = matched.map(_._2).getOrElse(0L)
-    if (nMatched == 0L) {
-      // Pure insert: a plain append commit — no empty sidecar to drag
-      // through the tombstone lifecycle.
-      val v = appendTagged(alignedUpdates, path, tag,
-        reRecordable(target, s.renames, Seq(statsCol)))
-      return (v, 0L, span.getLong(0))
-    }
-    val m = matched.get._1
+      .filter(_._2 > 0L).getOrElse {
+        // Pure insert: a plain append commit — no empty sidecar to drag
+        // through the tombstone lifecycle.
+        return (commit(alignedUpdates, path, "append", tag = tag,
+          statsCols = reRecordable(target, s.renames, Seq(statsCol))),
+          0L, span.rows)
+      }
     // The distinct matched-key frame feeds the cardinality probe and
     // — only when CDF stages post/insert images — two more joins;
     // with one consumer the checkpoint materialization is pure waste
@@ -4468,44 +4707,14 @@ object GraftLake {
     require(mk.isNullAt(1) || mk.getLong(1) <= 1L,
       "mergeDv: multiple update rows share a key that matches a target " +
         "row — each matched target may be replaced by at most one source row")
-    val nInserted = span.getLong(0) -
-      (if (mk.isNullAt(0)) 0L else mk.getLong(0))
-    val dvName = s"data/c${java.util.UUID.randomUUID().toString.take(12)}"
-    stageDvSidecar(m.select(DvCols.map(col): _*), path, dvName)
-    val dataName = s"data/c${java.util.UUID.randomUUID().toString.take(12)}"
-    // CHECK + stats fused into the data-set write; a violation must
-    // also reclaim the already-staged DV sidecar.
-    val stats =
-      try stageSet(alignedUpdates, path, dataName,
-        reRecordable(target, s.renames, Seq(statsCol)), cons)
-      catch { case e: IllegalStateException =>
-        import scala.jdk.CollectionConverters._
-        Files.walk(Paths.get(path, dvName)).iterator().asScala.toSeq
-          .reverse.foreach(p => Files.deleteIfExists(p))
-        throw e
-      }
-    val cdfSet =
-      if (!cdfEnabled(path)) None
-      else {
-        val pre = m.select(target.fieldNames.toIndexedSeq.map(col): _*)
-        val post = alignedUpdates.join(matchedKeys, keyCols, "left_semi")
-        val ins = alignedUpdates.join(matchedKeys, keyCols, "left_anti")
-        stageCdf(path, Seq((pre, "update_preimage"),
-          (post, "update_postimage"), (ins, "insert")))
-      }
-    val v = publishEntry(path, "updatedv", dataName, alignedUpdates.schema,
-      tag, stats, Seq.empty, Some(cons), cdfSet = cdfSet,
-      expectVersion = Some(s.version), dvSidecar = Some(dvName))
+    val nInserted = span.rows - (if (mk.isNullAt(0)) 0L else mk.getLong(0))
+    val v = dvCommit(d, m.select(DvCols.map(col): _*), alignedUpdates,
+      Seq(statsCol), tag, Seq(
+        (m.select(target.fieldNames.toIndexedSeq.map(col): _*), "update_preimage"),
+        (alignedUpdates.join(matchedKeys, keyCols, "left_semi"), "update_postimage"),
+        (alignedUpdates.join(matchedKeys, keyCols, "left_anti"), "insert")))
     (v, nMatched, nInserted)
   }
-
-  /** Tagged append used by [[mergeDv]]'s pure-insert fast path —
-    * [[commit]] with the exactly-once tag threaded through.
-    */
-  private def appendTagged(
-      df: DataFrame, path: String, tag: Option[String],
-      statsCols: Seq[String]): Int =
-    commit(df, path, "append", tag = tag, statsCols = statsCols)
 
   /** Compiled clause dispatch of a flexible MERGE — pure Column
     * expressions over a struct-folded join frame with columns `t`
@@ -4536,16 +4745,22 @@ object GraftLake {
     def insPred: Column = !tEx && notMatchedAny
   }
 
-  /** Validate `clauses` against the target schema / source columns
-    * and compile them to a [[MergeDispatch]]. Per row the FIRST
-    * clause of its family whose condition holds applies; NULL
-    * conditions coalesce to not-satisfied (SQL/Delta three-valued
-    * rule); empty assignments mean the star form.
+  /** Validate the join keys and `clauses` against the target schema /
+    * source columns and compile the clauses to a [[MergeDispatch]].
+    * Per row the FIRST clause of its family whose condition holds
+    * applies; NULL conditions coalesce to not-satisfied (SQL/Delta
+    * three-valued rule); empty assignments mean the star form.
     */
   private def compileMergeDispatch(
-      target: StructType, sourceCols: Seq[String],
+      d: DmlScope, source: DataFrame, keyCols: Seq[String],
       clauses: Seq[MergeClause]): MergeDispatch = {
     import org.apache.spark.sql.functions.expr
+    val target = d.target
+    val sourceCols = source.columns.toSeq
+    keyCols.foreach(k => require(target.fieldNames.contains(k),
+      s"no merge key column '$k' at ${d.path}"))
+    keyCols.foreach(k => require(sourceCols.contains(k),
+      s"merge source lacks key column '$k'"))
     require(clauses.nonEmpty, "mergeActions needs at least one clause")
     clauses.foreach { c =>
       val ok = (c.when, c.action) match {
@@ -4653,6 +4868,47 @@ object GraftLake {
       insertCols = target.fields.toIndexedSeq.map(insertVal))
   }
 
+  /** ONE physical join execution for a flexible MERGE: `targetRows`
+    * (columns `tNames`) full-outer-joined to `source` on the keys and
+    * checkpointed, because it fans out to up to 6 consumers (survivors,
+    * inserts, 4 CDF images) which would each recompute it. Each side
+    * folds into a STRUCT column named t / s with a `_t_ex` / `_s_ex`
+    * existence marker — `t.<col>` / `s.<col>` references (including
+    * the user's clause SQL) resolve as struct-field access, which
+    * SURVIVES localCheckpoint (plain `t`/`s` alias qualifiers would
+    * not: a checkpointed LogicalRDD drops them, and the sides share
+    * key-column names). Null semantics are preserved because every
+    * access is field-level.
+    */
+  private def mergeJoin(
+      targetRows: DataFrame, tNames: Seq[String], source: DataFrame,
+      keyCols: Seq[String]): DataFrame = {
+    def folded(side: String, names: Seq[String]): Column =
+      functions.struct((names :+ s"_${side}_ex")
+        .map(n => col(s"$side.$n").as(n)): _*).as(side)
+    targetRows.withColumn("_t_ex", lit(1)).alias("t")
+      .join(source.withColumn("_s_ex", lit(1)).alias("s"),
+        keyCols.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _),
+        "full_outer")
+      .select(folded("t", tNames), folded("s", source.columns.toSeq))
+      .localCheckpoint(true)
+  }
+
+  /** Delta's cardinality rule: refuse only when a source key carried
+    * by several source rows `matches` a target row (duplicate keys
+    * among pure inserts are legal). Both probes are delta-sized.
+    */
+  private def refuseAmbiguousMatches(
+      source: DataFrame, keyCols: Seq[String])(
+      matches: DataFrame => Boolean): Unit = {
+    val (dupKeys, nDup) = checkpointWithCount(
+      source.groupBy(keyCols.map(col): _*)
+        .agg(functions.count(lit(1)).as("_n")).filter(col("_n") > 1).drop("_n"))
+    require(nDup == 0 || !matches(dupKeys),
+      "MERGE: multiple source rows match the same target row — " +
+        "deduplicate the source on the key columns first")
+  }
+
   /** Flexible MERGE: the general Delta clause shape — an ordered list
     * of `WHEN MATCHED [AND cond] THEN UPDATE SET .../DELETE`,
     * `WHEN NOT MATCHED [AND cond] THEN INSERT ...`, and `WHEN NOT
@@ -4697,128 +4953,49 @@ object GraftLake {
       spark: SparkSession, path: String, source: DataFrame,
       keyCols: Seq[String], statsCol: String, clauses: Seq[MergeClause],
       tag: Option[String] = None): (Int, Int, Int) = {
-    import org.apache.spark.sql.functions.count
-    val s = snapshot(path)
-    require(s.version >= 0, s"no table at $path")
-    tag.foreach { t => s.tags.get(t).foreach { v => return (v, 0, 0) } }
-    require(s.tombstones.isEmpty,
-      s"outstanding merge-on-read tombstones at $path: compact first " +
-        "(a raw file-set rewrite would resurrect tombstoned rows)")
-    val target = StructType.fromDDL(s.schemaDdl)
-    keyCols.foreach(k => require(target.fieldNames.contains(k),
-      s"no merge key column '$k' at $path"))
-    keyCols.foreach(k => require(source.columns.contains(k),
-      s"merge source lacks key column '$k'"))
-    val disp = compileMergeDispatch(target, source.columns.toSeq, clauses)
+    val d = openDml(spark, path, tag, refuseTombstones = Some(CompactFirst))
+    d.replayed.foreach(v => return (v, 0, 0))
+    import d.{s, target}
+    val disp = compileMergeDispatch(d, source, keyCols, clauses)
     import disp.{matched, bySource}
     val live = s.live
-    // Victim selection — see the pruning posture in the doc above.
+    // Victim selection — see the pruning posture in the doc above. An
+    // empty source matches nothing; a span needs a prunable statsCol
+    // carried by every source row (a NULL could match anywhere).
     val spanSurvivors: Seq[LiveSet] =
       if (!source.columns.contains(statsCol)) live
       else {
-        // Same posture as deleteKeys: numeric span pruning is only
-        // sound on an integral-typed key — string min/max are
-        // lexicographic and can cast to an inverted span (and under
-        // ANSI mode the cast throws on mixed values) — and both
-        // endpoints must be non-null.
-        // DATE/TIMESTAMP statsCols prune too: statLongExpr is the
-        // exact integer image (days/micros) the stats were recorded
-        // under, so the span test stays sound for temporal keys.
-        val srcIntegral = isPrunableType(source.schema(statsCol).dataType)
-        val span =
-          if (srcIntegral) {
-            val e = statLongExpr(source.schema(statsCol).dataType, col(statsCol))
-            source.agg(count(col(statsCol)), count(lit(1)),
-              org.apache.spark.sql.functions.min(e),
-              org.apache.spark.sql.functions.max(e)).head
-          }
-          else source.agg(count(col(statsCol)), count(lit(1)),
-            lit(null).cast("long"), lit(null).cast("long")).head
-        if (span.getLong(1) == 0L) Seq.empty // empty source: no matches
-        else if (!srcIntegral || span.getLong(0) != span.getLong(1) ||
-            span.isNullAt(2) || span.isNullAt(3)) live
-        else {
-          val (uLo, uHi) = (span.getLong(2), span.getLong(3))
-          live.filter { ls =>
-            ls.statsFor(statsCol) match {
-              case Some(SetStats(_, lo, hi, _, _)) => !(hi < uLo || lo > uHi)
-              case None => true
-            }
-          }
+        val span = keySpan(source, statsCol)
+        if (span.rows == 0L) Seq.empty
+        else span.complete.fold(live) { case (lo, hi) =>
+          pruneSets(path, live, Seq((statsCol, lo, hi)))._1
         }
       }
     val rewriteTarget = bySource.nonEmpty || matched.nonEmpty
     val scanSets = if (bySource.nonEmpty) live else spanSurvivors
-    val rewriteSets =
-      if (bySource.nonEmpty) live
-      else if (matched.nonEmpty) spanSurvivors
-      else Seq.empty
+    val rewriteSets = if (rewriteTarget) scanSets else Seq.empty
     val scanDf = scanSets.map(readSet(spark, path, _, target, s.renames))
       .reduceLeftOption(_.unionByName(_))
-    // Delta's cardinality rule: bail only when a duplicated source
-    // key actually matches a target row (dup keys among pure inserts
-    // are legal). Both probes are delta-sized.
-    val (dupKeys, nDup) = checkpointWithCount(
-      source.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("_n")).filter(col("_n") > 1).drop("_n"))
-    if (nDup > 0) {
-      val ambiguous = scanDf.exists(df =>
-        df.select(keyCols.map(col): _*)
-          .join(dupKeys, keyCols, "left_semi").head(1).nonEmpty)
-      require(!ambiguous,
-        "MERGE: multiple source rows match the same target row — " +
-          "deduplicate the source on the key columns first")
-    }
+    refuseAmbiguousMatches(source, keyCols)(dupKeys => scanDf.exists(df =>
+      df.select(keyCols.map(col): _*)
+        .join(dupKeys, keyCols, "left_semi").head(1).nonEmpty))
     val emptyTarget = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), target)
-    val tFrame = scanDf.getOrElse(emptyTarget)
-      .withColumn("_t_ex", lit(1)).alias("t")
-    val sFrame = source.withColumn("_s_ex", lit(1)).alias("s")
-    val joinCond = keyCols.map(k => col(s"t.$k") === col(s"s.$k"))
-      .reduce(_ && _)
-    // ONE physical join execution for the whole merge: the full-outer
-    // join fans out to up to 6 consumers (survivors, inserts, 4 CDF
-    // images) which would each recompute it. Fold each side into a
-    // STRUCT column named t / s — `t.<col>` / `s.<col>` references
-    // (including the user's clause SQL) resolve as struct-field
-    // access, which SURVIVES localCheckpoint (plain `t`/`s` alias
-    // qualifiers would not: a checkpointed LogicalRDD drops them, and
-    // the sides share key-column names). Null semantics are
-    // preserved because every access below is field-level.
-    val tNames = target.fieldNames.toSeq :+ "_t_ex"
-    val sNames = source.columns.toSeq :+ "_s_ex"
-    val j = tFrame.join(sFrame, joinCond, "full_outer")
-      .select(
-        functions.struct(tNames.map(n => col(s"t.$n").as(n)): _*).as("t"),
-        functions.struct(sNames.map(n => col(s"s.$n").as(n)): _*).as("s"))
-      .localCheckpoint(true)
+    val j = mergeJoin(scanDf.getOrElse(emptyTarget), target.fieldNames.toSeq,
+      source, keyCols)
     lastMergeActionsJoin = Some(j)
-    val outCols = target.fields.toIndexedSeq
     val survivors =
       if (!rewriteTarget) emptyTarget
       else j.filter(disp.tEx && disp.survives).select(disp.survivorCols: _*)
     val inserts = j.filter(disp.insPred).select(disp.insertCols: _*)
-    val cdfSet =
-      if (!cdfEnabled(path)) None
-      else {
-        val tCols = outCols.map(f => col(s"t.${f.name}").as(f.name))
-        stageCdf(path, Seq(
-          (j.filter(disp.updPred).select(tCols: _*), "update_preimage"),
-          (j.filter(disp.updPred).select(disp.survivorCols: _*),
-            "update_postimage"),
-          (j.filter(disp.delPred).select(tCols: _*), "delete"),
-          (inserts, "insert")))
-      }
-    val out = survivors.unionByName(inserts)
-    val reStats = reRecordable(target, s.renames,
-      rewriteSets.flatMap(_.stats.map(_.col)) :+ statsCol)
-    val v = commit(out, path, "merge", tag = tag,
-      statsCols = reStats, removeSets = rewriteSets.map(_.set),
-      bloomCols = reRecordable(target, s.renames,
-        bloomColsOf(path, rewriteSets.map(_.set))),
-      cdfSet = cdfSet,
-      fence = fenceFor(spark, path, rewriteSets.map(_.set).toSet,
-        s.tombstones))
+    val tCols = target.fields.toIndexedSeq.map(f => col(s"t.${f.name}").as(f.name))
+    val cdfSet = stageCdf(path, Seq(
+      (j.filter(disp.updPred).select(tCols: _*), "update_preimage"),
+      (j.filter(disp.updPred).select(disp.survivorCols: _*), "update_postimage"),
+      (j.filter(disp.delPred).select(tCols: _*), "delete"),
+      (inserts, "insert")))
+    val v = cowRewrite(d, "merge", survivors.unionByName(inserts), rewriteSets,
+      Seq(statsCol), cdfSet, tag)
     (v, rewriteSets.size, live.size - rewriteSets.size)
   }
 
@@ -4853,137 +5030,60 @@ object GraftLake {
       keyCols: Seq[String], statsCol: String, clauses: Seq[MergeClause],
       tag: Option[String] = None): (Int, Long, Long, Long) = {
     import org.apache.spark.sql.functions.count
-    val s = snapshot(path)
-    require(s.version >= 0, s"no table at $path")
-    tag.foreach { t => s.tags.get(t).foreach { v => return (v, 0L, 0L, 0L) } }
-    val target = StructType.fromDDL(s.schemaDdl)
-    keyCols.foreach(k => require(target.fieldNames.contains(k),
-      s"no merge key column '$k' at $path"))
-    keyCols.foreach(k => require(source.columns.contains(k),
-      s"merge source lacks key column '$k'"))
-    val disp = compileMergeDispatch(target, source.columns.toSeq, clauses)
+    val d = openDml(spark, path, tag)
+    d.replayed.foreach(v => return (v, 0L, 0L, 0L))
+    import d.{s, target}
+    val disp = compileMergeDispatch(d, source, keyCols, clauses)
     // Span pruning (matched-only merges), same degrade posture as
-    // mergeActions: only an all-non-null INTEGRAL source statsCol
-    // yields a sound span; by-source clauses force the full scan.
-    val srcIntegral = source.columns.contains(statsCol) &&
-      isPrunableType(source.schema(statsCol).dataType)
-    val span =
-      if (srcIntegral) {
-        val e = statLongExpr(source.schema(statsCol).dataType, col(statsCol))
-        source.agg(count(lit(1)), count(col(statsCol)),
-          org.apache.spark.sql.functions.min(e),
-          org.apache.spark.sql.functions.max(e)).head
-      }
-      else source.agg(count(lit(1)), count(lit(1)),
-        lit(null).cast("long"), lit(null).cast("long")).head
-    val nSrc = span.getLong(0)
-    if (nSrc == 0L && disp.bySource.isEmpty) return (s.version, 0L, 0L, 0L)
-    val cons0: (Seq[(String, Long, Long)], Seq[(String, Seq[Long])]) =
-      if (disp.bySource.nonEmpty || !srcIntegral ||
-          span.getLong(1) != nSrc || span.isNullAt(2) || span.isNullAt(3))
-        (Seq.empty, Seq.empty)
-      else (Seq((statsCol, span.getLong(2), span.getLong(3))), Seq.empty)
+    // mergeActions; by-source clauses force the full scan.
+    val span = keySpan(source, statsCol)
+    if (span.rows == 0L && disp.bySource.isEmpty) return (s.version, 0L, 0L, 0L)
+    val ranges = span.complete.filter(_ => disp.bySource.isEmpty).toSeq
+      .map { case (lo, hi) => (statsCol, lo, hi) }
     // Position-prefixed visible slice (empty-but-typed when no live
     // set survives pruning — inserts must still dispatch).
-    val visible = visibleWithPositions(spark, path, s, cons0).getOrElse {
-      val dvFields = Seq(
-        org.apache.spark.sql.types.StructField("__dv_set",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("__dv_file",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("__dv_pos",
-          org.apache.spark.sql.types.LongType))
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(dvFields ++ target.fields))
-    }
-    // ONE physical join execution for the whole merge (same struct
-    // fold + localCheckpoint discipline as mergeActions); the t
-    // struct carries the position triple for the sidecar.
-    val tNames = (DvCols ++ target.fieldNames.toSeq) :+ "_t_ex"
-    val sNames = source.columns.toSeq :+ "_s_ex"
-    val tFrame = visible.withColumn("_t_ex", lit(1)).alias("t")
-    val sFrame = source.withColumn("_s_ex", lit(1)).alias("s")
-    val joinCond = keyCols.map(k => col(s"t.$k") === col(s"s.$k"))
-      .reduce(_ && _)
-    val j = tFrame.join(sFrame, joinCond, "full_outer")
-      .select(
-        functions.struct(tNames.map(n => col(s"t.$n").as(n)): _*).as("t"),
-        functions.struct(sNames.map(n => col(s"s.$n").as(n)): _*).as("s"))
-      .localCheckpoint(true)
-    // Delta's cardinality rule: bail only when a duplicated source
-    // key actually matches a target row. Both probes are delta-sized.
-    val (dupKeys, nDup) = checkpointWithCount(
-      source.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("_n")).filter(col("_n") > 1).drop("_n"))
-    if (nDup > 0) {
-      val matchedKeys = j.filter(disp.tEx && disp.sEx)
+    val visible = visibleWithPositions(spark, path, s, (ranges, Seq.empty)).getOrElse(
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+        StructType(StructType.fromDDL(
+          "__dv_set STRING, __dv_file STRING, __dv_pos BIGINT").fields ++
+          target.fields)))
+    // The t struct carries the position triple for the sidecar.
+    val j = mergeJoin(visible, DvCols ++ target.fieldNames.toSeq, source, keyCols)
+    refuseAmbiguousMatches(source, keyCols)(dupKeys =>
+      j.filter(disp.tEx && disp.sEx)
         .select(keyCols.map(k => col(s"s.$k").as(k)): _*)
-      require(matchedKeys.join(dupKeys, keyCols, "left_semi").head(1).isEmpty,
-        "MERGE: multiple source rows match the same target row — " +
-          "deduplicate the source on the key columns first")
-    }
+        .join(dupKeys, keyCols, "left_semi").head(1).nonEmpty)
     // ONE pass over the checkpointed join sizes all three outcomes.
     val cnt = j.agg(count(when(disp.updPred, 1)),
       count(when(disp.delPred, 1)), count(when(disp.insPred, 1))).head
     val (nUpd, nDel, nIns) = (cnt.getLong(0), cnt.getLong(1), cnt.getLong(2))
     if (nUpd + nDel + nIns == 0L) return (s.version, 0L, 0L, 0L)
-    val consRules = s.constraints
     val inserts = j.filter(disp.insPred).select(disp.insertCols: _*)
     if (nUpd + nDel == 0L) {
       // Pure insert: a plain append commit (validates constraints in
       // the claim loop; appends serve the CDF feed as inserts).
-      val v = appendTagged(inserts, path, tag,
-        reRecordable(target, s.renames, Seq(statsCol)))
+      val v = commit(inserts, path, "append", tag = tag,
+        statsCols = reRecordable(target, s.renames, Seq(statsCol)))
       return (v, 0L, 0L, nIns)
     }
     val tCols = target.fields.toIndexedSeq.map(f =>
       col(s"t.${f.name}").as(f.name))
+    def positions(rows: DataFrame): DataFrame =
+      rows.select(DvCols.map(c => col(s"t.$c").as(c)): _*)
     if (nUpd + nIns == 0L) {
-      // Pure delete: a position tombstone, exactly deleteDv's commit
-      // shape — no empty data set enters the log, and the same
-      // mutation fence: the staged positions bind to these sets'
-      // physical layout, so a racing compact/rewrite of one (or a
-      // racing position mask on one) aborts this commit.
+      // Pure delete: a position tombstone, exactly deleteDv's commit.
       val delRows = j.filter(disp.delPred)
-      val refSets = delRows.select(col("t.__dv_set")).distinct()
-        .collect().map(_.getString(0)).toSet
-      val cdfSet =
-        if (!cdfEnabled(path)) None
-        else stageCdf(path, Seq((delRows.select(tCols: _*), "delete")))
-      val v = commit(
-        delRows.select(DvCols.map(c => col(s"t.$c").as(c)): _*),
-        path, "tombstone", tag = tag, cdfSet = cdfSet,
-        fence = fenceFor(spark, path, refSets, s.tombstones))
+      val v = dvTombstone(d, positions(delRows), tag,
+        Seq((delRows.select(tCols: _*), "delete")))
       return (v, 0L, nDel, 0L)
     }
     val postImages = j.filter(disp.updPred).select(disp.survivorCols: _*)
-    val appended = postImages.unionByName(inserts)
-    val dvName = s"data/c${java.util.UUID.randomUUID().toString.take(12)}"
-    stageDvSidecar(j.filter(disp.updPred || disp.delPred)
-      .select(DvCols.map(c => col(s"t.$c").as(c)): _*), path, dvName)
-    val dataName = s"data/c${java.util.UUID.randomUUID().toString.take(12)}"
-    // CHECK + stats fused into the data-set write; a violation must
-    // also reclaim the already-staged DV sidecar.
-    val stats =
-      try stageSet(appended, path, dataName,
-        reRecordable(target, s.renames, Seq(statsCol)), consRules)
-      catch { case e: IllegalStateException =>
-        import scala.jdk.CollectionConverters._
-        Files.walk(Paths.get(path, dvName)).iterator().asScala.toSeq
-          .reverse.foreach(p => Files.deleteIfExists(p))
-        throw e
-      }
-    val cdfSet =
-      if (!cdfEnabled(path)) None
-      else stageCdf(path, Seq(
+    val v = dvCommit(d, positions(j.filter(disp.updPred || disp.delPred)),
+      postImages.unionByName(inserts), Seq(statsCol), tag, Seq(
         (j.filter(disp.updPred).select(tCols: _*), "update_preimage"),
         (postImages, "update_postimage"),
         (j.filter(disp.delPred).select(tCols: _*), "delete"),
         (inserts, "insert")))
-    val v = publishEntry(path, "updatedv", dataName, appended.schema, tag,
-      stats, Seq.empty, Some(consRules), cdfSet = cdfSet,
-      expectVersion = Some(s.version), dvSidecar = Some(dvName))
     (v, nUpd, nDel, nIns)
   }
 
@@ -5006,7 +5106,7 @@ object GraftLake {
   def delete(
       spark: SparkSession, path: String, predicate: Column,
       statsCol: Option[String] = None): (Int, Int, Int, Long) =
-    deleteCore(spark, path, predicate, statsCol, pruneDisjoint = None)
+    cowPredicateMutation(spark, path, predicate, statsCol, Seq.empty, None)
 
   /** MERGE-ON-READ DELETE: instead of rewriting the hit file-sets
     * (copy-on-write [[delete]]), commit a TOMBSTONE set holding just
@@ -5039,9 +5139,7 @@ object GraftLake {
     // never reach the feed as inserts-then-deletes — re-inserting a
     // tombstoned key requires a compact first, which the
     // append-after-delete spec pins, so the feed stays consistent.)
-    val cdfSet =
-      if (!cdfEnabled(path)) None
-      else stageCdf(path, Seq((matching, "delete")))
+    val cdfSet = stageCdf(path, Seq((matching, "delete")))
     val v = commit(keys, path, "tombstone", cdfSet = cdfSet)
     (v, n)
   }
@@ -5077,29 +5175,11 @@ object GraftLake {
     */
   def deleteDv(
       spark: SparkSession, path: String, predicate: Column): (Int, Long) = {
-    val s = snapshot(path)
-    require(s.version >= 0, s"no table at $path")
-    val target = StructType.fromDDL(s.schemaDdl)
-    val visible = visibleWithPositions(spark, path, s,
-      predicateConstraints(predicate, target, s.generated))
-      .getOrElse(return (s.version, 0L))
-    val (matching, n) =
-      checkpointWithCount(visible.filter(coalesce(predicate, lit(false))))
-    if (n == 0L) return (s.version, 0L)
-    val cdfSet =
-      if (!cdfEnabled(path)) None
-      else stageCdf(path, Seq((matching.select(
-        target.fieldNames.toIndexedSeq.map(col): _*), "delete")))
-    // The tombstone's positions bind to these sets' physical layout:
-    // a racing compact/rewrite of one (or a racing position mask on
-    // one) must abort this commit, not silently mask nothing.
-    val refSets = matching.select(col("__dv_set")).distinct()
-      .collect().map(_.getString(0)).toSet
-    val v = commit(
-      matching.select(col("__dv_set"), col("__dv_file"), col("__dv_pos")),
-      path, "tombstone", cdfSet = cdfSet,
-      fence = fenceFor(spark, path, refSets, s.tombstones))
-    (v, n)
+    val d = openDml(spark, path)
+    dvMatches(d, predicate).fold((d.s.version, 0L)) { case (matching, n) =>
+      (dvTombstone(d, matching, None, Seq((matching.select(
+        d.target.fieldNames.toIndexedSeq.map(col): _*), "delete"))), n)
+    }
   }
 
   /** Instrumentation: (scanned, skipped) live-set counts of the last
@@ -5113,8 +5193,6 @@ object GraftLake {
   private[this] val _lastDvScanSets =
     ThreadLocal.withInitial[(Int, Int)](() => (0, 0))
   private[graft] def lastDvScanSets: (Int, Int) = _lastDvScanSets.get()
-  private[graft] def lastDvScanSets_=(v: (Int, Int)): Unit =
-    _lastDvScanSets.set(v)
 
   /** Instrumentation: (scanned, skipped) live-set counts of the last
     * copy-on-write [[delete]]/[[update]] victim search — same hook
@@ -5123,8 +5201,6 @@ object GraftLake {
   private[this] val _lastCowScanSets =
     ThreadLocal.withInitial[(Int, Int)](() => (0, 0))
   private[graft] def lastCowScanSets: (Int, Int) = _lastCowScanSets.get()
-  private[graft] def lastCowScanSets_=(v: (Int, Int)): Unit =
-    _lastCowScanSets.set(v)
 
   /** Conjunctive integral range constraints IMPLIED by `predicate`,
     * extracted from its unresolved expression tree: top-level AND
@@ -5138,16 +5214,11 @@ object GraftLake {
     * matching row — manifest-level data skipping for DV mutations,
     * derived from the predicate itself so the SQL route prunes with
     * zero caller hints. OR branches, casts, and anything non-literal
-    * contribute no constraint (conservative).
-    */
-  private[sources] def predicateSpans(
-      predicate: Column, target: StructType): Seq[(String, Long, Long)] =
-    predicateConstraints(predicate, target)._1
-
-  /** [[predicateSpans]] plus the EXACT value lists of `=`/`IN`
-    * conjuncts — the shape per-set Bloom sidecars can answer when
-    * zone maps cannot (high-cardinality keys interleaved across every
-    * set's span). Returned as (ranges, equalities).
+    * contribute no constraint (conservative). Alongside the ranges come
+    * the EXACT value lists of `=`/`IN` conjuncts — the shape per-set
+    * Bloom sidecars can answer when zone maps cannot (high-cardinality
+    * keys interleaved across every set's span). Returned as (ranges,
+    * equalities).
     */
   private[sources] def predicateConstraints(
       predicate: Column, target: StructType,
@@ -5352,13 +5423,6 @@ object GraftLake {
       cons._2)
   }
 
-  /** Does `ls` possibly hold a row satisfying constraints extracted
-    * from a mutation predicate? Zone-map test per range conjunct +
-    * Bloom-sidecar test per equality/IN conjunct (a set where EVERY
-    * candidate value tests negative provably holds no matching row —
-    * blooms have no false negatives). Missing stats or missing/corrupt
-    * sidecars read conservatively.
-    */
   /** GENERATED-COLUMN TRANSITIVE PRUNING (Delta's generated-column
     * partition pruning): a predicate on a BASE column derives range
     * constraints on every generated column whose recorded expression
@@ -5430,6 +5494,13 @@ object GraftLake {
     }
   }
 
+  /** Does `ls` possibly hold a row satisfying constraints extracted
+    * from a mutation predicate? Zone-map test per range conjunct +
+    * Bloom-sidecar test per equality/IN conjunct (a set where EVERY
+    * candidate value tests negative provably holds no matching row —
+    * blooms have no false negatives). Missing stats or missing/corrupt
+    * sidecars read conservatively.
+    */
   private[sources] def setMayMatch(
       path: String, ls: LiveSet,
       ranges: Seq[(String, Long, Long)],
@@ -5470,22 +5541,16 @@ object GraftLake {
         (Seq.empty, Seq.empty)): Option[DataFrame] = {
     val target = StructType.fromDDL(s.schemaDdl)
     val (dv, keyTs) = loadTombstones(spark, path, s.tombstones)
-    val (scanSets, skipSets) =
-      s.live.partition(setMayMatch(path, _, cons._1, cons._2))
-    lastDvScanSets = (scanSets.size, skipSets.size)
-    def projectWithPos(raw: DataFrame, own: StructType,
-        setCol: org.apache.spark.sql.Column): DataFrame = {
-      val ownNames = own.fieldNames.toSet
-      raw.select((Seq(setCol.as("__dv_set"), col("__dv_file"),
-        col("__dv_pos")) ++
-        target.fields.toSeq.map { f =>
-          (f.name +: s.renames.getOrElse(f.name, Seq.empty))
-            .find(ownNames) match {
-              case Some(phys) => col(phys).as(f.name)
-              case None => lit(null).cast(f.dataType).as(f.name)
-            }
-        }): _*)
-    }
+    val (scanSets, skipSets) = pruneSets(path, s.live, cons._1, cons._2)
+    _lastDvScanSets.set((scanSets.size, skipSets.size))
+    def projectWithPos(raw: DataFrame, own: StructType, setCol: Column): DataFrame =
+      projectToTarget(raw, own, target, s.renames,
+        Seq(setCol.as("__dv_set"), col("__dv_file"), col("__dv_pos")))
+    def filePos(level: Int): Column = functions.element_at(
+      functions.split(col("_metadata.file_path"), "/"), level)
+    def withPos(raw: DataFrame): DataFrame = raw
+      .withColumn("__dv_file", filePos(-1))
+      .withColumn("__dv_pos", col("_metadata.row_index"))
     // Same plan-size convergence as the plain read: same-schema
     // ordinary "data/<set>" FLAT sets scan as ONE multi-path relation
     // — the set identity is re-derived from the file path (penultimate
@@ -5496,30 +5561,17 @@ object GraftLake {
     val bulk = bulkable.groupBy(_.schemaDdl).toSeq.sortBy(_._1)
       .map { case (ddl, group) =>
         val own = StructType.fromDDL(ddl)
-        val raw0 = spark.read.schema(own)
-          .parquet(group.map(ls => setPath(path, ls.set)): _*)
-          .withColumn("__dv_file", functions.element_at(
-            functions.split(col("_metadata.file_path"), "/"), -1))
-          .withColumn("__dv_pos", col("_metadata.row_index"))
-          .withColumn("__dv_setname", functions.concat(lit("data/"),
-            functions.element_at(
-              functions.split(col("_metadata.file_path"), "/"), -2)))
-        val masked = dv match {
-          case Some(d) =>
-            raw0.withColumnRenamed("__dv_setname", "__dv_set")
-              .join(functions.broadcast(d.select(
-                col("__dv_set"), col("__dv_file"), col("__dv_pos"))),
-                Seq("__dv_set", "__dv_file", "__dv_pos"), "left_anti")
-          case None => raw0.withColumnRenamed("__dv_setname", "__dv_set")
-        }
+        val raw0 = withPos(spark.read.schema(own)
+          .parquet(group.map(ls => setPath(path, ls.set)): _*))
+        val named = raw0.withColumn("__dv_set",
+          functions.concat(lit("data/"), filePos(-2)))
+        val masked = dv.fold(named)(d => named.join(
+          functions.broadcast(d.select(DvCols.map(col): _*)), DvCols, "left_anti"))
         projectWithPos(masked, own, col("__dv_set"))
       }
     val perSet = rest.map { ls =>
       val own = StructType.fromDDL(ls.schemaDdl)
-      val raw0 = spark.read.schema(own).parquet(setPath(path, ls.set))
-        .withColumn("__dv_file", functions.element_at(
-          functions.split(col("_metadata.file_path"), "/"), -1))
-        .withColumn("__dv_pos", col("_metadata.row_index"))
+      val raw0 = withPos(spark.read.schema(own).parquet(setPath(path, ls.set)))
       val masked = dv match {
         case Some(d) =>
           val m = d.filter(col("__dv_set") === ls.set)
@@ -5562,60 +5614,16 @@ object GraftLake {
       spark: SparkSession, path: String, predicate: Column,
       sets: Seq[(String, Column)],
       statsCol: Option[String] = None): (Int, Long) = {
-    val s = snapshot(path)
-    require(s.version >= 0, s"no table at $path")
-    require(sets.nonEmpty, "UPDATE with no assignments")
-    val target = StructType.fromDDL(s.schemaDdl)
-    sets.foreach { case (c, _) =>
-      require(target.fieldNames.contains(c),
-        s"UPDATE: no column '$c' at $path")
+    val d = openDml(spark, path)
+    requireAssignments(d, sets)
+    dvMatches(d, predicate).fold((d.s.version, 0L)) { case (matching, n) =>
+      val pre = matching.select(d.target.fieldNames.toIndexedSeq.map(col): _*)
+      // Every row here already satisfies the predicate, so no per-row
+      // WHEN is needed.
+      val post = pre.select(postImage(d.target, sets): _*)
+      (dvCommit(d, matching.select(DvCols.map(col): _*), post, statsCol.toSeq,
+        None, Seq((pre, "update_preimage"), (post, "update_postimage"))), n)
     }
-    require(sets.map(_._1).distinct.size == sets.size,
-      "UPDATE: duplicate assignment targets")
-    val visible = visibleWithPositions(spark, path, s,
-      predicateConstraints(predicate, target, s.generated))
-      .getOrElse(return (s.version, 0L))
-    val (matching, n) =
-      checkpointWithCount(visible.filter(coalesce(predicate, lit(false))))
-    if (n == 0L) return (s.version, 0L)
-    val pre = matching.select(target.fieldNames.toIndexedSeq.map(col): _*)
-    // All assignments in ONE select over the pre-image (every row here
-    // already satisfies the predicate, so no per-row WHEN is needed).
-    val post = pre.select(target.fields.toIndexedSeq.map { f =>
-      sets.find(_._1 == f.name) match {
-        case Some((_, v)) => v.cast(f.dataType).as(f.name)
-        case None => col(f.name)
-      }
-    }: _*)
-    // The rewritten rows are NEW data: CHECK constraints gate them
-    // like any append, and the validated rule-set rides the publish
-    // loop's racing-writer freshness fence.
-    val cons = s.constraints
-    // Stage both halves before the claim: the DV sidecar masking the
-    // old positions, and the data set carrying the new rows. The log
-    // entry names them together, so readers see neither or both.
-    // CHECK + stats ride the data-set write ([[stageSet]]); a
-    // violation reclaims the already-staged DV sidecar too.
-    val dvName = s"data/c${java.util.UUID.randomUUID().toString.take(12)}"
-    stageDvSidecar(matching.select(DvCols.map(col): _*), path, dvName)
-    val dataName = s"data/c${java.util.UUID.randomUUID().toString.take(12)}"
-    val stats =
-      try stageSet(post, path, dataName,
-        reRecordable(target, s.renames, statsCol.toSeq), cons)
-      catch { case e: IllegalStateException =>
-        import scala.jdk.CollectionConverters._
-        Files.walk(Paths.get(path, dvName)).iterator().asScala.toSeq
-          .reverse.foreach(p => Files.deleteIfExists(p))
-        throw e
-      }
-    val cdfSet =
-      if (!cdfEnabled(path)) None
-      else stageCdf(path, Seq(
-        (pre, "update_preimage"), (post, "update_postimage")))
-    val v = publishEntry(path, "updatedv", dataName, post.schema, None,
-      stats, Seq.empty, Some(cons), cdfSet = cdfSet,
-      expectVersion = Some(s.version), dvSidecar = Some(dvName))
-    (v, n)
   }
 
   /** REPLACE WHERE (Delta's `overwrite` + `replaceWhere`): atomically
@@ -5635,25 +5643,16 @@ object GraftLake {
   def replaceWhere(
       spark: SparkSession, path: String, df: DataFrame,
       c: String, lo: Long, hi: Long): (Int, Int, Int, Long) = {
-    val s = snapshot(path)
-    require(s.version >= 0, s"no table at $path")
     require(lo <= hi, s"empty range [$lo, $hi]")
-    require(s.tombstones.isEmpty,
-      s"outstanding merge-on-read tombstones at $path: compact first")
-    val target = StructType.fromDDL(s.schemaDdl)
+    val d = openDml(spark, path, refuseTombstones = Some("compact first"))
+    import d.{s, target}
     require(target.fieldNames.contains(c), s"no column '$c' at $path")
     val inRange = functions.col(c) >= lo && functions.col(c) <= hi
     val nOutside = df.filter(!coalesce(inRange, lit(false))).count()
     require(nOutside == 0,
       s"replaceWhere: $nOutside replacement row(s) fall outside " +
         s"$c in [$lo, $hi] — the predicate must cover every new row")
-    val live = s.live
-    val (candidates, kept) = live.partition { ls =>
-      ls.statsFor(c) match {
-        case Some(SetStats(_, sLo, sHi, _, _)) => !(sHi < lo || sLo > hi)
-        case None => true // unknown span — must look
-      }
-    }
+    val (candidates, kept) = pruneSets(path, s.live, Seq((c, lo, hi)))
     // Sets provably FULLY inside the range drop by reference — no row
     // of theirs needs rewriting (only a metadata-cheap count, plus a
     // row scan when CDF must record their delete images). Straddling
@@ -5668,30 +5667,16 @@ object GraftLake {
       inside.map(ls => readSet(spark, path, ls, target, s.renames).count()).sum +
         straddleDf.map(_.filter(coalesce(inRange, lit(false))).count())
           .getOrElse(0L)
-    val aligned = df.select(target.fields.map { f =>
-      if (df.columns.contains(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }.toIndexedSeq: _*)
-    val cdfSet =
-      if (!cdfEnabled(path)) None
-      else {
-        val oldInRange = (readAll(inside).toSeq ++
-          straddleDf.map(_.filter(coalesce(inRange, lit(false)))).toSeq)
-          .reduceLeftOption(_.unionByName(_)).getOrElse(aligned.limit(0))
-        stageCdf(path, Seq((oldInRange, "delete"), (aligned, "insert")))
-      }
+    val aligned = alignTo(df, target)
+    val cdfSet = stageCdf(path, Seq(
+      ((readAll(inside).toSeq ++
+        straddleDf.map(_.filter(coalesce(inRange, lit(false)))).toSeq)
+        .reduceLeftOption(_.unionByName(_)).getOrElse(aligned.limit(0)), "delete"),
+      (aligned, "insert")))
     val remainder = straddleDf.map(_.filter(!coalesce(inRange, lit(false))))
       .getOrElse(aligned.limit(0))
-    val rewritten = remainder.unionByName(aligned)
-    val reStats = reRecordable(target, s.renames,
-      candidates.flatMap(_.stats.map(_.col)) :+ c)
-    val v = commit(rewritten, path, "merge",
-      statsCols = reStats, removeSets = candidates.map(_.set),
-      bloomCols = reRecordable(target, s.renames,
-        bloomColsOf(path, candidates.map(_.set))),
-      cdfSet = cdfSet,
-      fence = fenceFor(spark, path, candidates.map(_.set).toSet,
-        s.tombstones))
+    val v = cowRewrite(d, "merge", remainder.unionByName(aligned), candidates,
+      Seq(c), cdfSet)
     (v, candidates.size, kept.size, replaced)
   }
 
@@ -5712,77 +5697,41 @@ object GraftLake {
     // Spec-hook hygiene: clear the last-shortlist BEFORE any early
     // return, so a tag-replay/empty-delta call never leaves a prior
     // call's shortlist visible to assertions.
-    lastDeleteKeysShortlist = Seq.empty
-    val s = snapshot(path)
-    require(s.version >= 0, s"no table at $path")
-    tag.foreach { t => s.tags.get(t).foreach { v => return (v, 0, s.live.size, 0L) } }
-    require(s.tombstones.isEmpty,
-      s"outstanding merge-on-read tombstones at $path: compact first " +
-        "(a raw file-set rewrite would resurrect tombstoned rows)")
-    val target = StructType.fromDDL(s.schemaDdl)
-    require(target.fieldNames.contains(keyCol), s"no column '$keyCol' at $path")
+    _lastDeleteKeysShortlist.remove()
+    val d = openDml(spark, path, tag, refuseTombstones = Some(CompactFirst))
+    import d.{s, target}
     val live = s.live
+    d.replayed.foreach(v => return (v, 0, live.size, 0L))
+    require(target.fieldNames.contains(keyCol), s"no column '$keyCol' at $path")
     // VICTIM SHORTLISTING — the delta is small, the table is not, so
     // no set may be scanned before cheaper evidence says it MIGHT hold
-    // a delta key (the deleteRange pruneDisjoint posture, extended to
-    // key sets). Two metadata-cheap passes, both sound (they only ever
-    // say "provably hit-free"):
-    //  1. zone maps: the delta's [min, max] key span (one tiny agg —
-    //     two longs to the driver) against each set's recorded
-    //     SetStats(keyCol); disjoint spans cannot collide.
+    // a delta key. Two metadata-cheap passes, both sound (they only
+    // ever say "provably hit-free"):
+    //  1. zone maps: the delta's key span (keySpan's lenient posture;
+    //     NULL keys never match, so a partial span still prunes);
     //  2. Bloom sidecars: for zone survivors with an intact bloom on
     //     the key column, ONE distributed pass over the DELTA tests
     //     every key against every broadcast bloom (O(|delta| × sets)
-    //     work, delta-sized) — a verified bloom that answers "no" for
-    //     every delta key cannot hold a matching row.
-    // Only the surviving shortlist is scanned for exact match counts;
-    // per batch the mirror pays O(delta + hit sets), not O(table).
-    // A non-integral key column (string keys are legal here — the
-    // semi-join matches them fine) has no sound numeric span: string
-    // min/max are LEXICOGRAPHIC, so even all-numeric strings can cast
-    // to an inverted span ("10" < "9" lexically) that wrongly prunes —
-    // and under ANSI mode the cast itself THROWS on mixed values like
-    // {"9","x"}. Span pruning therefore requires the column's TYPE to
-    // be integral (the cast below never runs otherwise) AND both
-    // endpoints non-null; anything else scans every live set rather
-    // than risking a silently-missed delete.
-    // (DATE/TIMESTAMP keys also span-prune: statLongExpr is the exact
-    // integer image their stats were recorded under.)
-    // Span/emptiness probe FIRST, over the RAW delta (count/min/max
-    // are duplicate-invariant): an empty delta — every batch of a CDC
+    //     work) — a bloom that answers "no" for every delta key cannot
+    //     hold a matching row.
+    // Only the shortlist is scanned for exact match counts; per batch
+    // the mirror pays O(delta + hit sets), not O(table). The span
+    // probe runs FIRST, over the RAW delta (count/min/max are
+    // duplicate-invariant): an empty delta — every batch of a CDC
     // stream with no deletes — exits after ONE tiny agg, never paying
     // the distinct+checkpoint materialization below.
     val rawKeys = keys.select(col(keyCol))
-    val keyIsIntegral = isPrunableType(rawKeys.schema(keyCol).dataType)
-    val kSpan =
-      if (keyIsIntegral) {
-        val e = statLongExpr(rawKeys.schema(keyCol).dataType, col(keyCol))
-        rawKeys.agg(
-          org.apache.spark.sql.functions.count(col(keyCol)),
-          org.apache.spark.sql.functions.min(e),
-          org.apache.spark.sql.functions.max(e)).head
-      }
-      else rawKeys.agg(
-        org.apache.spark.sql.functions.count(col(keyCol)),
-        lit(null).cast("long"), lit(null).cast("long")).head
-    if (kSpan.getLong(0) == 0L) return (s.version, 0, live.size, 0L) // empty delta
+    val span = keySpan(rawKeys, keyCol)
+    if (span.nonNull == 0L) return (s.version, 0, live.size, 0L) // empty delta
     val k = rawKeys.distinct().localCheckpoint(true)
-    val castable = keyIsIntegral && !kSpan.isNullAt(1) && !kSpan.isNullAt(2)
-    val (kMin, kMax) =
-      if (castable) (kSpan.getLong(1), kSpan.getLong(2)) else (0L, 0L)
-    val zoneSurvivors =
-      if (!castable) live
-      else live.filter { ls =>
-        ls.statsFor(keyCol) match {
-          case Some(SetStats(_, sLo, sHi, _, _)) => !(sHi < kMin || sLo > kMax)
-          case None => true // unknown span — must look
-        }
-      }
+    val zoneSurvivors = span.span.fold(live) { case (lo, hi) =>
+      pruneSets(path, live, Seq((keyCol, lo, hi)))._1
+    }
     // Bloom sidecars hash INTEGRAL values (writeBloomSidecar refuses
     // temporal columns), so only integral keys may consult them —
     // temporal keys stop at the zone-map leg above.
     val bloomed: Map[String, (Array[Long], Int)] =
-      if (!castable || !isIntegralType(k.schema(keyCol).dataType)) Map.empty
+      if (span.span.isEmpty || !isIntegralType(k.schema(keyCol).dataType)) Map.empty
       else zoneSurvivors
         .flatMap(ls => readBloomSidecar(path, ls.set, keyCol)
           .map(ls.set -> _)).toMap
@@ -5824,7 +5773,7 @@ object GraftLake {
       }
     val shortlist = zoneSurvivors.filter(ls =>
       !bloomed.contains(ls.set) || bloomHits(ls.set))
-    lastDeleteKeysShortlist = shortlist.map(_.set)
+    _lastDeleteKeysShortlist.set(shortlist.map(_.set))
     if (shortlist.isEmpty) return (s.version, 0, live.size, 0L)
     // ONE relation per distinct schema, ONE hash agg by set name —
     // O(schemas) plan however long the shortlist.
@@ -5838,18 +5787,9 @@ object GraftLake {
     val deleted = matchCounts.values.sum
     if (hitSets.isEmpty) return (s.version, 0, live.size, 0L)
     val hitDf = readSetsBulk(spark, path, hitSets, target, s.renames).get
-    val cdfSet =
-      if (!cdfEnabled(path)) None
-      else stageCdf(path, Seq((hitDf.join(k, Seq(keyCol), "left_semi"), "delete")))
-    val rewritten = hitDf.join(k, Seq(keyCol), "left_anti")
-    val reStats = reRecordable(target, s.renames,
-      hitSets.flatMap(_.stats.map(_.col)) ++ statsCol.toSeq)
-    val v = commit(rewritten, path, "delete", tag = tag,
-      statsCols = reStats, removeSets = hitSets.map(_.set),
-      bloomCols = reRecordable(target, s.renames,
-        bloomColsOf(path, hitSets.map(_.set))),
-      cdfSet = cdfSet,
-      fence = fenceFor(spark, path, hitSets.map(_.set).toSet, s.tombstones))
+    val cdfSet = stageCdf(path, Seq((hitDf.join(k, Seq(keyCol), "left_semi"), "delete")))
+    val v = cowRewrite(d, "delete", hitDf.join(k, Seq(keyCol), "left_anti"),
+      hitSets, statsCol.toSeq, cdfSet, tag)
     (v, hitSets.size, live.size - hitSets.size, deleted)
   }
 
@@ -5857,8 +5797,13 @@ object GraftLake {
     * actually scanned for match counts (its post-zone-map, post-bloom
     * shortlist) — only shortlisted sets are ever read, so asserting a
     * disjoint/never-hit set absent here proves it was not scanned.
+    * THREAD-LOCAL for the [[lastDvScanSets]] reason: gates read it
+    * back while other threads run their own key deletes.
     */
-  @volatile private[graft] var lastDeleteKeysShortlist: Seq[String] = Seq.empty
+  private[this] val _lastDeleteKeysShortlist =
+    ThreadLocal.withInitial[Seq[String]](() => Seq.empty)
+  private[graft] def lastDeleteKeysShortlist: Seq[String] =
+    _lastDeleteKeysShortlist.get()
 
   /** Spec hook: the (checkpointed) join frame of the last
     * [[mergeActions]] call — lets a spec assert the fan-out consumers
@@ -5875,102 +5820,9 @@ object GraftLake {
   def deleteRange(
       spark: SparkSession, path: String, col: String, lo: Long, hi: Long,
       statsCol: Option[String] = None): (Int, Int, Int, Long) =
-    deleteCore(spark, path,
+    cowPredicateMutation(spark, path,
       functions.col(col) >= lo && functions.col(col) <= hi,
-      statsCol.orElse(Some(col)),
-      pruneDisjoint = Some((col, lo, hi)))
-
-  private def deleteCore(
-      spark: SparkSession, path: String, predicate: Column,
-      statsCol: Option[String],
-      pruneDisjoint: Option[(String, Long, Long)]): (Int, Int, Int, Long) = {
-    val s = snapshot(path)
-    require(s.version >= 0, s"no table at $path")
-    require(s.tombstones.isEmpty,
-      s"outstanding merge-on-read tombstones at $path: compact first " +
-        "(a raw file-set rewrite would resurrect tombstoned rows)")
-    val target = StructType.fromDDL(s.schemaDdl)
-    val live = s.live
-    // Manifest-level prune: provably no-match sets never even scan.
-    // The caller's explicit range (deleteRange) composes with ranges
-    // and equalities EXTRACTED from the predicate itself (zone maps +
-    // Bloom sidecars), so a plain delete() on a laid-out or
-    // bloom-indexed column prunes the same way with zero hints.
-    val (pRanges, pEqs) = predicateConstraints(predicate, target, s.generated)
-    val ranges = pruneDisjoint.toSeq ++ pRanges
-    val (candidates, skipped) =
-      if (ranges.isEmpty && pEqs.isEmpty) (live, Seq.empty[LiveSet])
-      else live.partition(setMayMatch(path, _, ranges, pEqs))
-    lastCowScanSets = (candidates.size, skipped.size)
-    if (candidates.isEmpty) return (s.version, 0, live.size, 0L)
-    // Per-set match counts, plus the CDF delete images when enabled —
-    // CDF tables fuse the two into ONE pass (guide §1.2): the delete
-    // images stage partitioned by candidate index and the counts fall
-    // out of the staged footers; set TOTALS (the emptied-outright
-    // test) come from the `_ridmap` metadata instead of a count
-    // aggregate (tombstones are required empty here, so recorded ==
-    // visible). Non-CDF tables keep the single count job.
-    val (hitSets, matchCounts, totOf, cdfSet): (Seq[LiveSet],
-        Map[String, Long], String => Long, Option[String]) =
-      if (!cdfEnabled(path)) {
-        val tagged = readSetsBulk(spark, path, candidates, target, s.renames,
-            tagCol = true).get
-          .groupBy(functions.col("__set"))
-          .agg(
-            org.apache.spark.sql.functions.count(lit(1)).as("tot"),
-            coalesce(org.apache.spark.sql.functions.sum(
-              when(coalesce(predicate, lit(false)), 1L).otherwise(0L)), lit(0L))
-              .as("n"))
-        val counts = tagged.collect()
-          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-        (candidates.filter(ls => counts.getOrElse(ls.set, (0L, 0L))._2 > 0),
-          counts.map { case (k, (_, n)) => k -> n },
-          (set: String) => counts(set)._1, None)
-      } else {
-        val tagged = readSetsBulk(spark, path, candidates, target, s.renames,
-          tagCol = true).get
-        val setName = s"cdf/c${java.util.UUID.randomUUID().toString.take(12)}"
-        val stage = Paths.get(path,
-          s"_stage_c${java.util.UUID.randomUUID().toString.take(12)}")
-        tagged.filter(coalesce(predicate, lit(false)))
-          .select((setIndexCol(candidates).as("__si") +:
-            target.fieldNames.toIndexedSeq.map(col)) :+
-            lit("delete").as("_change_type"): _*)
-          .write.partitionBy("__si").parquet(stage.toString)
-        val perIdx = flattenStagedCdf(stage, Paths.get(setPath(path, setName)))
-        val mc = perIdx.map { case (i, n) => candidates(i).set -> n }
-        val hs = candidates.filter(ls => mc.getOrElse(ls.set, 0L) > 0)
-        if (hs.isEmpty) reclaimStaged(path, setName) // no-hit: no commit
-        (hs, mc,
-          (set: String) => setRecordCountFromSidecar(path, set)
-            .getOrElse(setRecordCountFromFooters(path, set)),
-          Some(setName))
-      }
-    val deleted = matchCounts.values.sum
-    if (hitSets.isEmpty) return (s.version, 0, live.size, 0L)
-    lazy val hitDf = readSetsBulk(spark, path, hitSets, target, s.renames).get
-    // Every hit set fully emptied → remove them BY REFERENCE: no
-    // rewritten parquet, and crucially no stat-less empty set that
-    // would conservatively scan in every later pruned mutation.
-    if (hitSets.forall(ls => totOf(ls.set) == matchCounts(ls.set))) {
-      val v = publishEntry(path, "delete", "", new StructType(), None,
-        Seq.empty, hitSets.map(_.set), cdfSet = cdfSet,
-        fence = fenceFor(spark, path, hitSets.map(_.set).toSet,
-          s.tombstones))
-      return (v, hitSets.size, live.size - hitSets.size, deleted)
-    }
-    val rewritten =
-      hitDf.filter(!coalesce(predicate, lit(false))) // NULL predicate keeps the row
-    val reStats = reRecordable(target, s.renames,
-      hitSets.flatMap(_.stats.map(_.col)) ++ statsCol.toSeq)
-    val v = commit(rewritten, path, "delete",
-      statsCols = reStats, removeSets = hitSets.map(_.set),
-      bloomCols = reRecordable(target, s.renames,
-        bloomColsOf(path, hitSets.map(_.set))),
-      cdfSet = cdfSet,
-      fence = fenceFor(spark, path, hitSets.map(_.set).toSet, s.tombstones))
-    (v, hitSets.size, live.size - hitSets.size, deleted)
-  }
+      statsCol.orElse(Some(col)), Seq((col, lo, hi)), None)
 
   /** Row-level UPDATE (copy-on-write): apply `sets` (column →
     * replacement expression, evaluated against the OLD row — all
@@ -5986,98 +5838,8 @@ object GraftLake {
   def update(
       spark: SparkSession, path: String, predicate: Column,
       sets: Seq[(String, Column)],
-      statsCol: Option[String] = None): (Int, Int, Int, Long) = {
-    val s = snapshot(path)
-    require(s.version >= 0, s"no table at $path")
-    require(sets.nonEmpty, "UPDATE with no assignments")
-    require(s.tombstones.isEmpty,
-      s"outstanding merge-on-read tombstones at $path: compact first " +
-        "(a raw file-set rewrite would resurrect tombstoned rows)")
-    val target = StructType.fromDDL(s.schemaDdl)
-    sets.foreach { case (c, _) =>
-      require(target.fieldNames.contains(c),
-        s"UPDATE: no column '$c' at $path")
-    }
-    require(sets.map(_._1).distinct.size == sets.size,
-      "UPDATE: duplicate assignment targets")
-    val live = s.live
-    val pred = coalesce(predicate, lit(false))
-    // Manifest-level prune off the predicate's implied constraints
-    // (zone maps for ranges, Bloom sidecars for equalities), then ONE
-    // distributed job: per-set match counts (O(sets) driver rows).
-    val (pRanges, pEqs) = predicateConstraints(predicate, target, s.generated)
-    val candidates =
-      if (pRanges.isEmpty && pEqs.isEmpty) live
-      else live.filter(setMayMatch(path, _, pRanges, pEqs))
-    lastCowScanSets = (candidates.size, live.size - candidates.size)
-    if (candidates.isEmpty) return (s.version, 0, live.size, 0L)
-    // CDF tables fuse the per-set match-count pass INTO the sidecar
-    // write (guide §1.2 "remove passes"): ONE distributed pass over
-    // the candidates stages BOTH change images (explode — the rows
-    // are read once, not once per image) partitioned by candidate
-    // index, and the per-set counts fall out of the staged footers
-    // (each match contributes exactly 2 rows). Non-CDF tables keep
-    // the plain count pass. Before this fusion an update read the
-    // hit sets FOUR times: count, preimage, postimage, rewrite.
-    val (hitSets, matchCounts, cdfSet):
-        (Seq[LiveSet], Map[String, Long], Option[String]) =
-      if (!cdfEnabled(path)) {
-        val tagged = readSetsBulk(spark, path, candidates, target, s.renames,
-            tagCol = true).get
-          .filter(pred)
-          .groupBy(functions.col("__set"))
-          .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-        val mc = tagged.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-        (candidates.filter(ls => mc.getOrElse(ls.set, 0L) > 0), mc, None)
-      } else {
-        val tagged = readSetsBulk(spark, path, candidates, target, s.renames,
-          tagCol = true).get
-        val preS = functions.struct(
-          (target.fields.toIndexedSeq.map(f => col(f.name).as(f.name)) :+
-            lit("update_preimage").as("_change_type")): _*)
-        val postS = functions.struct(
-          (target.fields.toIndexedSeq.map { f =>
-            sets.find(_._1 == f.name) match {
-              case Some((_, v)) => v.cast(f.dataType).as(f.name)
-              case None => col(f.name).as(f.name)
-            }
-          } :+ lit("update_postimage").as("_change_type")): _*)
-        val setName = s"cdf/c${java.util.UUID.randomUUID().toString.take(12)}"
-        val stage = Paths.get(path,
-          s"_stage_c${java.util.UUID.randomUUID().toString.take(12)}")
-        tagged.filter(pred)
-          .select(setIndexCol(candidates).as("__si"),
-            functions.explode(functions.array(preS, postS)).as("__r"))
-          .select(col("__si"), col("__r.*"))
-          .write.partitionBy("__si").parquet(stage.toString)
-        val perIdx = flattenStagedCdf(stage, Paths.get(setPath(path, setName)))
-        val mc = perIdx.map { case (i, twoN) => candidates(i).set -> twoN / 2 }
-        val hs = candidates.filter(ls => mc.getOrElse(ls.set, 0L) > 0)
-        if (hs.isEmpty) reclaimStaged(path, setName) // no-hit: no commit
-        (hs, mc, Some(setName))
-      }
-    val updated = matchCounts.values.sum
-    if (hitSets.isEmpty) return (s.version, 0, live.size, 0L)
-    val hitDf = readSetsBulk(spark, path, hitSets, target, s.renames).get
-    // All assignments in ONE select: every RHS reads the input row, so
-    // `SET a = b, b = a` swaps rather than cascading.
-    def applied(df: DataFrame): DataFrame = df.select(target.fields.map { f =>
-      sets.find(_._1 == f.name) match {
-        case Some((_, v)) =>
-          when(pred, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
-      }
-    }.toIndexedSeq: _*)
-    val reStats = reRecordable(target, s.renames,
-      hitSets.flatMap(_.stats.map(_.col)) ++ statsCol.toSeq)
-    val v = commit(applied(hitDf), path, "update",
-      statsCols = reStats, removeSets = hitSets.map(_.set),
-      bloomCols = reRecordable(target, s.renames,
-        bloomColsOf(path, hitSets.map(_.set))),
-      cdfSet = cdfSet,
-      fence = fenceFor(spark, path, hitSets.map(_.set).toSet, s.tombstones))
-    (v, hitSets.size, live.size - hitSets.size, updated)
-  }
+      statsCol: Option[String] = None): (Int, Int, Int, Long) =
+    cowPredicateMutation(spark, path, predicate, statsCol, Seq.empty, Some(sets))
 
   /** Transactional COMPACTION: rewrite all live file-sets into one
     * range-sorted set of `numFiles` files, as a single atomic commit
@@ -6135,29 +5897,15 @@ object GraftLake {
       spark: SparkSession, path: String, predicate: Column,
       sortCols: Seq[String], numFiles: Int,
       statsCol: Option[String] = None): (Int, Int, Int) = {
-    val s = snapshot(path)
-    require(s.version >= 0, s"no table at $path")
-    require(s.tombstones.isEmpty,
-      s"outstanding merge-on-read tombstones at $path: a scoped compact " +
-        "cannot partially materialize them — run the full OPTIMIZE first")
-    val target = StructType.fromDDL(s.schemaDdl)
-    val (pRanges, pEqs) = predicateConstraints(predicate, target, s.generated)
-    val (hit, kept) =
-      if (pRanges.isEmpty && pEqs.isEmpty) (s.live, Seq.empty[LiveSet])
-      else s.live.partition(setMayMatch(path, _, pRanges, pEqs))
-    lastCowScanSets = (hit.size, kept.size)
-    if (hit.size < 2) return (s.version, 0, s.live.size)
-    val df = readSetsBulk(spark, path, hit, target, s.renames).get
+    val d = openDml(spark, path, refuseTombstones = Some(
+      "a scoped compact cannot partially materialize them — run the full " +
+        "OPTIMIZE first"))
+    val (hit, kept) = cowCandidates(d, predicate)
+    if (hit.size < 2) return (d.s.version, 0, d.s.live.size)
+    val df = readSetsBulk(spark, path, hit, d.target, d.s.renames).get
       .repartitionByRange(numFiles, sortCols.map(col): _*)
       .sortWithinPartitions(sortCols.map(col): _*)
-    val reStats = reRecordable(target, s.renames,
-      hit.flatMap(_.stats.map(_.col)) ++ statsCol.toSeq)
-    val v = commit(df, path, "compact", statsCols = reStats,
-      removeSets = hit.map(_.set),
-      bloomCols = reRecordable(target, s.renames,
-        bloomColsOf(path, hit.map(_.set))),
-      fence = fenceFor(spark, path, hit.map(_.set).toSet, s.tombstones))
-    (v, hit.size, kept.size)
+    (cowRewrite(d, "compact", df, hit, statsCol.toSeq), hit.size, kept.size)
   }
 
   /** Z-ORDER compaction: one atomic `compact` commit whose rewritten

@@ -1152,17 +1152,6 @@ object IcebergExport {
     Files.writeString(Paths.get(mdir, "version-hint.text"), version.toString)
   }
 
-  /** Per-file (path, rows) of the parquet files under `dataDir` — ONE
-    * distributed metadata aggregation, no per-file jobs.
-    */
-  private[graft] def fileRows(
-      spark: SparkSession, dataDir: String): Seq[(String, Long)] =
-    spark.read.parquet(dataDir)
-      .groupBy(regexp_replace(col("_metadata.file_path"), "^file:(//)?", "")
-        .as("f"))
-      .agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sortBy(_._1)
-
   /** Per-file (path, rows, partition values) — ONE distributed
     * `_metadata.file_path` aggregation; hive-layout files are
     * value-pure per partition column, so `first()` is exact.

@@ -30,9 +30,6 @@ object Sources {
   def readJson(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
   def writeCsv(df: DataFrame, path: String, header: Boolean = true): Unit =
     df.write.mode(SaveMode.Overwrite).option("header", header.toString).csv(path)
 
