@@ -410,8 +410,7 @@ object GraftLake {
         case _: java.util.ConcurrentModificationException =>
           // a racing copy/constraint landed: drop the staged set and
           // re-diff the directory against the fresh ledger.
-          Files.walk(Paths.get(path, setName)).iterator().asScala.toSeq
-            .reverse.foreach(p => Files.deleteIfExists(p))
+          rmTree(Paths.get(path, setName))
       }
     }
     throw new IllegalStateException("unreachable")
@@ -507,13 +506,8 @@ object GraftLake {
           publishDecision(txnMarkerPath(token), "aborted")
           cacheTxnDecisionLocally(done.map(_._1).toSeq, token, "aborted")
           done.foreach { case (p, v) =>
-            import scala.jdk.CollectionConverters._
-            parse(Files.readString(logFile(p, v))).add.foreach { setName =>
-              val sp = Paths.get(setPath(p, setName))
-              if (Files.exists(sp))
-                Files.walk(sp).iterator().asScala.toSeq.reverse
-                  .foreach(q => Files.deleteIfExists(q))
-            }
+            parse(Files.readString(logFile(p, v))).add
+              .foreach(reclaimStaged(p, _))
           }
         } catch { case scala.util.control.NonFatal(_) => () }
         throw e
@@ -643,12 +637,17 @@ object GraftLake {
       else Some(partitionedInputProbe(df, partCols, statsCols, cons)._1)
     Files.createDirectories(logDir(path))
     val perSet = stagePartitionedMulti(df, path, partCols, statsCols, extraPre)
-    val flat = partCols.map(pc => SetStats(pc,
+    publishEntry(path, "padd", "", df.schema, None,
+      layoutStats(partCols, perSet), Seq.empty, Some(cons), perSet)
+  }
+
+  /** A partitioned commit's header stats: each layout column's span
+    * over the staged partition sets.
+    */
+  private def layoutStats(partCols: Seq[String], perSet: Seq[LiveSet]): Seq[SetStats] =
+    partCols.map(pc => SetStats(pc,
       perSet.flatMap(_.statsFor(pc)).map(_.min).min,
       perSet.flatMap(_.statsFor(pc)).map(_.max).max))
-    publishEntry(path, "padd", "", df.schema, None, flat, Seq.empty,
-      Some(cons), perSet)
-  }
 
   /** Re-layout the WHOLE table into one file-set per `partCol` value
     * (one atomic partitioned commit, merge-on-read tombstones
@@ -667,16 +666,8 @@ object GraftLake {
   def compactPartitionedBy(
       spark: SparkSession, path: String, partCols: Seq[String],
       statsCols: Seq[String] = Seq.empty): Int = {
-    val cs = commits(path)
-    val live = liveAt(cs)
-    require(live.nonEmpty, s"nothing to compact at $path")
-    val df = read(spark, path).localCheckpoint(true)
-    val perSet = stagePartitionedMulti(df, path, partCols, statsCols)
-    val flat = partCols.map(pc => SetStats(pc,
-      perSet.flatMap(_.statsFor(pc)).map(_.min).min,
-      perSet.flatMap(_.statsFor(pc)).map(_.max).max))
-    publishEntry(path, "padd", "", df.schema, None, flat,
-      live.map(_.set) ++ tombstonesAt(cs), None, perSet)
+    val d = openDml(spark, path)
+    compactSets(d, d.s.live, statsCols, partCols)(_.localCheckpoint(true))
   }
 
   /** DYNAMIC PARTITION OVERWRITE (Hive/Delta `INSERT OVERWRITE ...
@@ -753,11 +744,8 @@ object GraftLake {
         (aligned -> "insert"))
     val perSet = stagePartitionedMulti(aligned, path, pcs,
       probeStats, Some(extraPre))
-    val flat = pcs.map(pc => SetStats(pc,
-      perSet.flatMap(_.statsFor(pc)).map(_.min).min,
-      perSet.flatMap(_.statsFor(pc)).map(_.max).max))
-    val v = publishEntry(path, "poverwrite", "", aligned.schema, None, flat,
-      victims.map(_.set), Some(cons), perSet, cdfSet,
+    val v = publishEntry(path, "poverwrite", "", aligned.schema, None,
+      layoutStats(pcs, perSet), victims.map(_.set), Some(cons), perSet, cdfSet,
       expectVersion = Some(s.version))
     (v, victims.size, s.live.size - victims.size)
   }
@@ -1033,8 +1021,7 @@ object GraftLake {
         partCols.zip(values).map { case (c, v) => SetStats(c, v, v) } ++
           extra.getOrElse(values, Seq.empty))
     }
-    Files.walk(stage).iterator().asScala.toSeq.reverse
-      .foreach(p => Files.deleteIfExists(p))
+    rmTree(stage)
     sets
   }
 
@@ -1637,7 +1624,7 @@ object GraftLake {
   private def footerCounts(
       path: String, setName: String): Seq[(String, Long)] = {
     import scala.jdk.CollectionConverters._
-    Files.walk(Paths.get(path, setName)).iterator().asScala.toSeq
+    Files.walk(Paths.get(setPath(path, setName))).iterator().asScala.toSeq
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .sortBy(_.toString)
       .map { f =>
@@ -1686,6 +1673,14 @@ object GraftLake {
   private[sources] def setRecordCountFromFooters(
       table: String, set: String): Long =
     footerCounts(table, set).map(_._2).sum
+
+  /** Recorded rows of a set from metadata alone — its `_ridmap`
+    * sidecar, else its footers; no Spark job. Equals the visible count
+    * only while no tombstone masks the set.
+    */
+  private def setRecordCount(table: String, set: String): Long =
+    setRecordCountFromSidecar(table, set)
+      .getOrElse(setRecordCountFromFooters(table, set))
 
   /** Instrumentation: parquet footers opened ON THE DRIVER by the last
     * [[readWithRowIds]] call — 0 when every rid-carrying set served its
@@ -1758,12 +1753,12 @@ object GraftLake {
     if (activeSqlTxn.get.isDefined) return
     autoCompactThreshold(path).foreach { t =>
       try {
-        val s = snapshot(path)
-        if (s.live.size > t && s.tombstones.isEmpty) {
-          val statsCols = reRecordable(StructType.fromDDL(s.schemaDdl),
-            s.renames, s.live.flatMap(_.stats.map(_.col)).distinct)
-          compact(spark, path, statsCols, numFiles = 4,
-            statsCol = statsCols.headOption)
+        val d = openDml(spark, path)
+        if (d.s.live.size > t && d.s.tombstones.isEmpty) {
+          val statsCols = reRecordable(d.target, d.s.renames,
+            d.s.live.flatMap(_.stats.map(_.col)).distinct)
+          compactSets(d, d.s.live, statsCols.headOption.toSeq)(
+            rangeSorted(statsCols, numFiles = 4))
         }
       } catch {
         // Best-effort stays best-effort (a racing CME just means
@@ -1833,9 +1828,10 @@ object GraftLake {
     * observe (zero extra passes), so MoR readers can skip sidecars
     * that cannot mask their file and conflict probes answer from
     * metadata instead of parquet rows ([[MorMasks.targetsOf]]).
+    * Returns the target sets.
     */
   private def stageDvSidecar(
-      dvRows: DataFrame, path: String, setName: String): Unit = {
+      dvRows: DataFrame, path: String, setName: String): Seq[String] = {
     val obs = org.apache.spark.sql.Observation(
       "graft-dvt-" + java.util.UUID.randomUUID().toString.take(8))
     dvRows.observe(obs,
@@ -1846,6 +1842,7 @@ object GraftLake {
       case _ => Seq.empty[String]
     }
     MorMasks.writeTargetsManifest(setPath(path, setName), targets)
+    targets
   }
 
   /** Stage a CDF sidecar set (when enabled): `parts` + a constant
@@ -1898,8 +1895,7 @@ object GraftLake {
           }
         out(idx) = n
       }
-    Files.walk(stage).iterator().asScala.toSeq.reverse
-      .foreach(p => Files.deleteIfExists(p))
+    rmTree(stage)
     out.toMap
   }
 
@@ -1926,12 +1922,13 @@ object GraftLake {
   }
 
   /** Delete a staged (but unpublished) set directory, if present. */
-  private def reclaimStaged(path: String, setName: String): Unit = {
+  private def reclaimStaged(path: String, setName: String): Unit =
+    rmTree(Paths.get(setPath(path, setName)))
+
+  /** Delete `p` and everything under it, if present. */
+  private def rmTree(p: Path): Unit = if (Files.exists(p)) {
     import scala.jdk.CollectionConverters._
-    val sp = Paths.get(setPath(path, setName))
-    if (Files.exists(sp))
-      Files.walk(sp).iterator().asScala.toSeq.reverse
-        .foreach(p => Files.deleteIfExists(p))
+    Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
   }
 
   /** Candidate-set index column for the fused count+CDF pass: maps the
@@ -1955,6 +1952,9 @@ object GraftLake {
       // collide (gaps, never reuse — the Delta posture).
       ridMinClaim: Option[Long] = None,
       fence: Option[MutationFence] = None,
+      // A positional tombstone's fence, built from the sets its
+      // positions point into as the sidecar write observed them.
+      dvFence: Set[String] => Option[MutationFence] = _ => None,
       txn: Option[String] = None): Int = {
     // CHECK constraints gate the data-bearing writes: the delta (or
     // the merge's rewritten set) is validated BEFORE staging, one
@@ -1977,12 +1977,12 @@ object GraftLake {
     // A positional-DV tombstone additionally records its target
     // manifest off the same write ([[stageDvSidecar]]).
     val setName = s"data/c${java.util.UUID.randomUUID().toString.take(12)}"
-    val stats =
+    val (stats, effFence) =
       if (action == "tombstone" && df.columns.contains("__dv_set")) {
-        stageDvSidecar(df, path, setName)
-        Seq.empty[SetStats]
-      } else stageSet(df, path, setName, statsCols,
-        validatedCons.getOrElse(Map.empty))
+        val targets = stageDvSidecar(df, path, setName)
+        (Seq.empty[SetStats], fence.orElse(dvFence(targets.toSet)))
+      } else (stageSet(df, path, setName, statsCols,
+        validatedCons.getOrElse(Map.empty)), fence)
     // EVERY staged set records its per-file counts as the `_ridmap`
     // sidecar (one write-time footer walk) so read-side metadata
     // consumers — COUNT(*) pushdown, DESCRIBE DETAIL num_rows, row-id
@@ -2004,7 +2004,7 @@ object GraftLake {
     val v =
       try publishEntry(path, action, setName, df.schema, tag, stats,
         removeSets, validatedCons, cdfSet = cdfSet, ridRows = ridRows,
-        expectRidBase = expectRidBase, fence = fence, txn = txn)
+        expectRidBase = expectRidBase, fence = effFence, txn = txn)
       catch {
         // A commit aborted by the identity-range or mutation fence
         // must not leave its staged set behind: positions/values were
@@ -2012,10 +2012,8 @@ object GraftLake {
         // bytes are garbage — drop them, let the caller re-stage
         // against the fresh snapshot.
         case e: java.util.ConcurrentModificationException
-            if expectRidBase.isDefined || fence.isDefined =>
-          import scala.jdk.CollectionConverters._
-          Files.walk(Paths.get(path, setName)).iterator().asScala.toSeq
-            .reverse.foreach(p => Files.deleteIfExists(p))
+            if expectRidBase.isDefined || effFence.isDefined =>
+          rmTree(Paths.get(path, setName))
           throw e
       }
     // Post-commit maintenance: data-GROWING commits may trigger the
@@ -2088,9 +2086,7 @@ object GraftLake {
         case other => other.toString.toLong
       }
       if (bad > 0) {
-        import scala.jdk.CollectionConverters._
-        Files.walk(Paths.get(dest)).iterator().asScala.toSeq.reverse
-          .foreach(p => Files.deleteIfExists(p))
+        rmTree(Paths.get(dest))
         throw new IllegalStateException(
           s"CHECK constraint '$name' ($sql) violated by $bad row(s) — " +
             "commit refused")
@@ -2212,14 +2208,12 @@ object GraftLake {
     // when rules exist, so unconstrained sinks pay nothing.
     val cons = snapshot(path).constraints
     if (cons.nonEmpty) {
-      import scala.jdk.CollectionConverters._
       try enforceConstraints(
         org.apache.spark.sql.SparkSession.active.read.parquet(s"$path/$setName"),
         cons)
       catch {
         case e: Throwable =>
-          Files.walk(setDir).iterator().asScala.toSeq.reverse
-            .foreach(p => Files.deleteIfExists(p))
+          rmTree(setDir)
           throw e
       }
     }
@@ -3050,18 +3044,12 @@ object GraftLake {
       cacheTxnDecisionLocally(ctx.journal.map(_._1).distinct.toSeq,
         tok, "aborted")
       ctx.journal.foreach { case (p, v, _, _, _) =>
-        import scala.jdk.CollectionConverters._
         // HEADER line only: partitioned (padd/poverwrite) commit files
         // are multi-line (header + per-set manifest lines), and the
         // header's add list already names every staged set — parsing
         // the whole file would throw and silently skip the reclaim.
         parse(Files.readString(logFile(p, v)).linesIterator.next())
-          .add.foreach { setName =>
-          val sp = Paths.get(setPath(p, setName))
-          if (Files.exists(sp))
-            Files.walk(sp).iterator().asScala.toSeq.reverse
-              .foreach(q => Files.deleteIfExists(q))
-        }
+          .add.foreach(reclaimStaged(p, _))
       }
     } catch { case scala.util.control.NonFatal(_) => () }
   }
@@ -3293,12 +3281,6 @@ object GraftLake {
       }
     }
 
-  private def liveAt(cs: Seq[Commit]): Seq[LiveSet] =
-    foldState(EmptySnapshot, cs).live
-
-  private def tombstonesAt(cs: Seq[Commit]): Seq[String] =
-    foldState(EmptySnapshot, cs).tombstones
-
   /** The LATEST table state, resolved in O(checkpoint + log suffix):
     * start from the last checkpoint (if any) and fold only the
     * commits after it. Without checkpoints every snapshot resolution
@@ -3502,8 +3484,7 @@ object GraftLake {
     val st = foldState(EmptySnapshot, upTo)
     val target = StructType.fromDDL(st.schemaDdl)
     assembleSets(spark, path, st.live, target, st.renames, st.tombstones)(
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), target))
+      emptyFrame(spark, target))
   }
 
   /** The positional-deletion-vector sidecar schema: (target set,
@@ -3891,9 +3872,12 @@ object GraftLake {
     require(s.version >= 0, s"no table at $path")
     val target = StructType.fromDDL(s.schemaDdl)
     assembleSets(spark, path, s.live, target, s.renames, s.tombstones)(
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), target))
+      emptyFrame(spark, target))
   }
+
+  /** A typed frame with no rows. */
+  private def emptyFrame(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
 
   /** TIME TRAVEL BY TIMESTAMP: the snapshot as of wall-clock
     * `tsMillis` — the last commit stamped at or before it. Commit
@@ -4393,21 +4377,22 @@ object GraftLake {
       }
     }
 
-  /** Copy-on-write materializer: `rewritten` replaces the `hit` sets,
-    * re-recording their stats dimensions (plus `statsCols`) and Bloom
-    * sidecars so pruning survives; a racing writer that touched a hit
-    * set aborts the commit (ConcurrentModificationException), never a
-    * lost update.
+  /** Copy-on-write materializer: `rewritten` replaces the `hit` sets
+    * (and the `materialized` tombstones, which its rows already
+    * applied), re-recording their stats dimensions (plus `statsCols`)
+    * and Bloom sidecars so pruning survives; a racing writer that
+    * touched a hit set aborts the commit
+    * (ConcurrentModificationException), never a lost update.
     */
   private def cowRewrite(
       d: DmlScope, action: String, rewritten: DataFrame, hit: Seq[LiveSet],
       statsCols: Seq[String], cdfSet: Option[String] = None,
-      tag: Option[String] = None): Int = {
+      tag: Option[String] = None, materialized: Seq[String] = Seq.empty): Int = {
     val hitNames = hit.map(_.set)
     commit(rewritten, d.path, action, tag = tag,
       statsCols = reRecordable(d.target, d.s.renames,
         hit.flatMap(_.stats.map(_.col)) ++ statsCols),
-      removeSets = hitNames,
+      removeSets = hitNames ++ materialized,
       bloomCols = reRecordable(d.target, d.s.renames,
         bloomColsOf(d.path, hitNames)),
       cdfSet = cdfSet,
@@ -4483,10 +4468,7 @@ object GraftLake {
         val perIdx = flattenStagedCdf(stage, Paths.get(setPath(path, setName)))
         val mc = perIdx.map { case (i, n) => candidates(i).set -> n / images.size }
         if (!mc.values.exists(_ > 0L)) reclaimStaged(path, setName) // no-hit: no commit
-        (mc,
-          (set: String) => setRecordCountFromSidecar(path, set)
-            .getOrElse(setRecordCountFromFooters(path, set)),
-          Some(setName))
+        (mc, setRecordCount(path, _), Some(setName))
       }
     val hitSets = candidates.filter(ls => matchCounts.getOrElse(ls.set, 0L) > 0)
     val matched = matchCounts.values.sum
@@ -4551,17 +4533,16 @@ object GraftLake {
   /** Deletion-vector materializer for pure deletes: a position
     * tombstone — no data set enters the log. Positions bind to their
     * sets' layout, so a racing compact/rewrite (or position mask) of
-    * one aborts this commit instead of silently masking nothing.
+    * one aborts this commit instead of silently masking nothing; the
+    * fenced sets are the targets the sidecar write observes.
     */
   private def dvTombstone(
       d: DmlScope, dvRows: DataFrame, tag: Option[String],
       cdf: => Seq[(DataFrame, String)]): Int = {
     val cdfSet = stageCdf(d.path, cdf)
-    val refSets = dvRows.select(col("__dv_set")).distinct()
-      .collect().map(_.getString(0)).toSet
     commit(dvRows.select(DvCols.map(col): _*), d.path, "tombstone",
       tag = tag, cdfSet = cdfSet,
-      fence = fenceFor(d.spark, d.path, refSets, d.s.tombstones))
+      dvFence = fenceFor(d.spark, d.path, _, d.s.tombstones))
   }
 
   // ---------------------------------------------------------------- merge
@@ -4979,11 +4960,9 @@ object GraftLake {
     refuseAmbiguousMatches(source, keyCols)(dupKeys => scanDf.exists(df =>
       df.select(keyCols.map(col): _*)
         .join(dupKeys, keyCols, "left_semi").head(1).nonEmpty))
-    val emptyTarget = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), target)
+    val emptyTarget = emptyFrame(spark, target)
     val j = mergeJoin(scanDf.getOrElse(emptyTarget), target.fieldNames.toSeq,
       source, keyCols)
-    lastMergeActionsJoin = Some(j)
     val survivors =
       if (!rewriteTarget) emptyTarget
       else j.filter(disp.tEx && disp.survives).select(disp.survivorCols: _*)
@@ -5043,8 +5022,7 @@ object GraftLake {
     // Position-prefixed visible slice (empty-but-typed when no live
     // set survives pruning — inserts must still dispatch).
     val visible = visibleWithPositions(spark, path, s, (ranges, Seq.empty)).getOrElse(
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(StructType.fromDDL(
+      emptyFrame(spark, StructType(StructType.fromDDL(
           "__dv_set STRING, __dv_file STRING, __dv_pos BIGINT").fields ++
           target.fields)))
     // The t struct carries the position triple for the sidecar.
@@ -5654,19 +5632,19 @@ object GraftLake {
         s"$c in [$lo, $hi] — the predicate must cover every new row")
     val (candidates, kept) = pruneSets(path, s.live, Seq((c, lo, hi)))
     // Sets provably FULLY inside the range drop by reference — no row
-    // of theirs needs rewriting (only a metadata-cheap count, plus a
-    // row scan when CDF must record their delete images). Straddling
-    // sets rewrite their outside-range remainder.
+    // of theirs needs rewriting or counting (tombstones are refused, so
+    // the recorded count is the visible one; a row scan runs only when
+    // CDF must record their delete images). Straddling sets rewrite
+    // their outside-range remainder.
     val (inside, straddle) = candidates.partition(ls =>
       ls.statsFor(c).exists(st => st.min >= lo && st.max <= hi))
     def readAll(sets: Seq[LiveSet]): Option[DataFrame] =
       sets.map(readSet(spark, path, _, target, s.renames))
         .reduceLeftOption(_.unionByName(_))
     val straddleDf = readAll(straddle)
-    val replaced =
-      inside.map(ls => readSet(spark, path, ls, target, s.renames).count()).sum +
-        straddleDf.map(_.filter(coalesce(inRange, lit(false))).count())
-          .getOrElse(0L)
+    val replaced = inside.map(ls => setRecordCount(path, ls.set)).sum +
+      straddleDf.map(_.filter(coalesce(inRange, lit(false))).count())
+        .getOrElse(0L)
     val aligned = alignTo(df, target)
     val cdfSet = stageCdf(path, Seq(
       ((readAll(inside).toSeq ++
@@ -5805,12 +5783,6 @@ object GraftLake {
   private[graft] def lastDeleteKeysShortlist: Seq[String] =
     _lastDeleteKeysShortlist.get()
 
-  /** Spec hook: the (checkpointed) join frame of the last
-    * [[mergeActions]] call — lets a spec assert the fan-out consumers
-    * read materialized data instead of re-executing the join.
-    */
-  @volatile private[graft] var lastMergeActionsJoin: Option[DataFrame] = None
-
   /** Zone-map DELETE of a `[lo, hi]` range on `col`: file-sets whose
     * recorded `SetStats(col)` span is DISJOINT from the range are
     * skipped WITHOUT scanning — the manifest-level pruning that makes
@@ -5849,28 +5821,14 @@ object GraftLake {
     * the rewritten files disjoint per-file min/max ranges, so parquet
     * row-group/file skipping rides the layout (the src08 property) —
     * plus set-level zone-map stats on `statsCol` for merge pruning.
-    * The same conflict check as merge applies: a concurrent commit
-    * that removed a live set fails the compaction cleanly.
+    * Outstanding merge-on-read tombstones are materialized and
+    * cleared; the conflict fence of [[compactSets]] applies.
     */
   def compact(
       spark: SparkSession, path: String, sortCols: Seq[String],
       numFiles: Int, statsCol: Option[String] = None): Int = {
-    val cs = commits(path)
-    val st = foldState(EmptySnapshot, cs)
-    val live = st.live
-    require(live.nonEmpty, s"nothing to compact at $path")
-    // read() applies live tombstones, so listing them in remove
-    // MATERIALIZES the merge-on-read deletes and clears them.
-    val df = read(spark, path)
-      .repartitionByRange(numFiles, sortCols.map(col): _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
-    commit(df, path, "compact",
-      statsCols = reRecordable(StructType.fromDDL(st.schemaDdl), st.renames,
-        live.flatMap(_.stats.map(_.col)) ++ statsCol.toSeq),
-      removeSets = live.map(_.set) ++ st.tombstones,
-      bloomCols = reRecordable(StructType.fromDDL(st.schemaDdl), st.renames,
-        bloomColsOf(path, live.map(_.set))),
-      fence = fenceFor(spark, path, live.map(_.set).toSet, st.tombstones))
+    val d = openDml(spark, path)
+    compactSets(d, d.s.live, statsCol.toSeq)(rangeSorted(sortCols, numFiles))
   }
 
   /** SCOPED compaction (Delta's `OPTIMIZE ... WHERE`): compact ONLY
@@ -5902,10 +5860,8 @@ object GraftLake {
         "OPTIMIZE first"))
     val (hit, kept) = cowCandidates(d, predicate)
     if (hit.size < 2) return (d.s.version, 0, d.s.live.size)
-    val df = readSetsBulk(spark, path, hit, d.target, d.s.renames).get
-      .repartitionByRange(numFiles, sortCols.map(col): _*)
-      .sortWithinPartitions(sortCols.map(col): _*)
-    (cowRewrite(d, "compact", df, hit, statsCol.toSeq), hit.size, kept.size)
+    (compactSets(d, hit, statsCol.toSeq)(rangeSorted(sortCols, numFiles)),
+      hit.size, kept.size)
   }
 
   /** Z-ORDER compaction: one atomic `compact` commit whose rewritten
@@ -5919,28 +5875,60 @@ object GraftLake {
   def compactZOrder(
       spark: SparkSession, path: String, colA: String, colB: String,
       numFiles: Int): Int = {
-    val cs = commits(path)
-    val st = foldState(EmptySnapshot, cs)
-    val live = st.live
-    require(live.nonEmpty, s"nothing to compact at $path")
-    val df = read(spark, path)
-    val r = df.agg(
-      org.apache.spark.sql.functions.min(col(colA).cast("double")),
-      org.apache.spark.sql.functions.max(col(colA).cast("double")),
-      org.apache.spark.sql.functions.min(col(colB).cast("double")),
-      org.apache.spark.sql.functions.max(col(colB).cast("double"))).head
-    val z = Sources.zorderKey(
-      col(colA), r.getDouble(0), r.getDouble(1),
-      col(colB), r.getDouble(2), r.getDouble(3))
-    val clustered = df.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-    commit(clustered, path, "compact",
-      statsCols = reRecordable(StructType.fromDDL(st.schemaDdl), st.renames,
-        live.flatMap(_.stats.map(_.col)) ++ Seq(colA, colB)),
-      removeSets = live.map(_.set) ++ st.tombstones,
-      fence = fenceFor(spark, path, live.map(_.set).toSet, st.tombstones))
+    val d = openDml(spark, path)
+    compactSets(d, d.s.live, Seq(colA, colB)) { rows =>
+      val r = rows.agg(
+        functions.min(col(colA).cast("double")),
+        functions.max(col(colA).cast("double")),
+        functions.min(col(colB).cast("double")),
+        functions.max(col(colB).cast("double"))).head
+      val z = Sources.zorderKey(
+        col(colA), r.getDouble(0), r.getDouble(1),
+        col(colB), r.getDouble(2), r.getDouble(3))
+      rangeSorted(Seq("__z"), numFiles)(rows.withColumn("__z", z)).drop("__z")
+    }
+  }
+
+  /** `df` range-partitioned into `numFiles` files on `cols`, sorted
+    * within each: disjoint per-file min/max ranges.
+    */
+  private def rangeSorted(cols: Seq[String], numFiles: Int)(df: DataFrame): DataFrame =
+    df.repartitionByRange(numFiles, cols.map(col): _*)
+      .sortWithinPartitions(cols.map(col): _*)
+
+  /** Compaction materializer, shared by every OPTIMIZE shape: the rows
+    * of `sets` are read from the pinned snapshot with its tombstones
+    * applied (the [[read]] path) and replace exactly those sets in ONE
+    * commit, together with the tombstones — only a whole-table
+    * compaction admits any, so they are materialized and cleared. A
+    * flat `layout` commits through [[cowRewrite]] (stats dimensions
+    * plus `statsCols` and Bloom sidecars re-recorded); `partCols`
+    * instead stages one set per partition value tuple with `statsCols`
+    * recorded per partition, as [[appendPartitionedBy]] does. Either
+    * way the commit is fenced: a racing commit that rewrote or
+    * position-masked a compacted set aborts it
+    * (ConcurrentModificationException), and a racing append is
+    * neither read nor removed.
+    */
+  private def compactSets(
+      d: DmlScope, sets: Seq[LiveSet], statsCols: Seq[String],
+      partCols: Seq[String] = Seq.empty)(layout: DataFrame => DataFrame): Int = {
+    import d.{s, spark, path}
+    require(sets.nonEmpty, s"nothing to compact at $path")
+    val rows = layout(assembleSets(spark, path, sets, d.target, s.renames,
+      s.tombstones)(emptyFrame(spark, d.target)))
+    if (partCols.isEmpty)
+      return cowRewrite(d, "compact", rows, sets, statsCols,
+        materialized = s.tombstones)
+    val perSet = stagePartitionedMulti(rows, path, partCols, statsCols)
+    val names = sets.map(_.set)
+    try publishEntry(path, "padd", "", rows.schema, None,
+      layoutStats(partCols, perSet), names ++ s.tombstones, None, perSet,
+      fence = fenceFor(spark, path, names.toSet, s.tombstones))
+    catch { case e: java.util.ConcurrentModificationException =>
+      perSet.foreach(ls => reclaimStaged(path, ls.set))
+      throw e
+    }
   }
 
   /** RESTORE the table to `version` (Delta's RESTORE TABLE ... TO
@@ -6177,16 +6165,8 @@ object GraftLake {
           // The claim seals the log at v-1: fold the COMPLETE prefix.
           val cs0 = commits(path)
           val (dead, cdfDead) = vacuumDead(path, cs0, retainMillis)
-          dead.foreach { p =>
-            import scala.jdk.CollectionConverters._
-            Files.walk(p).iterator().asScala.toSeq.reverse
-              .foreach(x => Files.deleteIfExists(x))
-          }
-          cdfDead.foreach { p =>
-            import scala.jdk.CollectionConverters._
-            Files.walk(p).iterator().asScala.toSeq.reverse
-              .foreach(x => Files.deleteIfExists(x))
-          }
+          dead.foreach(rmTree)
+          cdfDead.foreach(rmTree)
           // Publish the vacuum entry into the held claim (atomic
           // replace, same as a commit) — releases the exclusion.
           val ts = math.max(System.currentTimeMillis(), snap.tsMillis)

@@ -212,6 +212,32 @@ class LakeDvSpec extends AnyFunSuite with SparkSpec {
     assert(GraftLake.read(spark, path).count() == 15L)
   }
 
+  test("fence: a deleteDv landing inside a compactPartitioned's window aborts the re-layout") {
+    import spark.implicits._
+    val path = freshTable()
+    GraftLake.create((1L to 20L).map(i => (i, i % 4)).toDF("id", "m"),
+      path, Some("id"))
+    GraftLake.beforePublishHook.set(Some(() => {
+      GraftLake.deleteDv(spark, path, col("id") <= 5)
+      ()
+    }))
+    // The re-layout's partition sets were staged before the mask
+    // landed: publishing them would remove the masked set and bring
+    // ids 1-5 back.
+    intercept[java.util.ConcurrentModificationException] {
+      GraftLake.compactPartitioned(spark, path, "m")
+    }
+    assert(GraftLake.read(spark, path).count() == 15L)
+    // The aborted re-layout leaves no staged set behind.
+    val s = GraftLake.snapshot(path)
+    assert(Files.list(java.nio.file.Paths.get(path, "data")).count() ==
+      s.live.size + s.tombstones.size)
+    GraftLake.compactPartitioned(spark, path, "m")
+    assert(GraftLake.snapshot(path).tombstones.isEmpty)
+    assert(GraftLake.snapshot(path).live.size == 4)
+    assert(GraftLake.read(spark, path).count() == 15L)
+  }
+
   test("fence: two deleteDv on the same set conflict; on disjoint sets they compose") {
     import spark.implicits._
     val path = freshTable()

@@ -180,6 +180,54 @@ class LakeJobCountSpec extends AnyFunSuite with SparkSpec {
     assert(rs == 1 && nr == 50L)
   }
 
+  test("replaceWhere job count does not grow with the sets fully inside the range") {
+    import spark.implicits._
+    def repl(lo: Long, hi: Long): DataFrame =
+      (lo to hi).map(i => (i, 0L, 0L)).toDF("id", "v", "m")
+    val p1 = twoSets()
+    val (_, rs1, _, n1) = pin("replaceWhereInside")(
+      GraftLake.replaceWhere(spark, p1, repl(101L, 200L), "id", 101L, 200L))
+    assert(rs1 == 1 && n1 == 100L)
+    val p2 = twoSets()
+    val (_, rs2, _, n2) = pin("replaceWhereInsideBoth")(
+      GraftLake.replaceWhere(spark, p2, repl(1L, 200L), "id", 1L, 200L))
+    assert(rs2 == 2 && n2 == 200L)
+    assert(JobPins("replaceWhereInside") == JobPins("replaceWhereInsideBoth"))
+  }
+
+  test("compaction job counts: compact, compactWhere, compactZOrder, compactPartitionedBy") {
+    val pc = twoSets()
+    pin("compact")(GraftLake.compact(spark, pc, Seq("id"), numFiles = 2, Some("id")))
+    val pw = twoSets()
+    val (_, rw, _) = pin("compactWhere")(GraftLake.compactWhere(spark, pw,
+      col("id") >= 1, Seq("id"), numFiles = 2, Some("id")))
+    assert(rw == 2)
+    val pz = twoSets()
+    pin("compactZOrder")(GraftLake.compactZOrder(spark, pz, "id", "v", numFiles = 2))
+    val pp = twoSets()
+    pin("compactPartitionedBy")(GraftLake.compactPartitionedBy(spark, pp, Seq("m")))
+    Seq(pc, pw, pz, pp).foreach(p => assert(GraftLake.read(spark, p).count() == 200L))
+  }
+
+  test("compaction job counts on Bloom-indexed sets") {
+    import spark.implicits._
+    def bloomSets(): String = {
+      val p = freshTable()
+      def evens(lo: Long, hi: Long): DataFrame =
+        (lo to hi by 2).map(i => (i, i * 10, i % 4)).toDF("id", "v", "m")
+      GraftLake.create(evens(2L, 100L), p, Some("id"), bloomCols = Seq("id"))
+      GraftLake.append(evens(102L, 200L), p, Some("id"), bloomCols = Seq("id"))
+      p
+    }
+    val pc = bloomSets()
+    pin("compactBloom")(GraftLake.compact(spark, pc, Seq("id"), numFiles = 2, Some("id")))
+    val pz = bloomSets()
+    pin("compactZOrderBloom")(GraftLake.compactZOrder(spark, pz, "id", "v", numFiles = 2))
+    // Both pay the same Bloom sidecar build on top of their plain shape.
+    assert(JobPins("compactZOrderBloom") - JobPins("compactZOrder") ==
+      JobPins("compactBloom") - JobPins("compact"))
+  }
+
   /** Jobs per call, measured on local[4] with the shapes above. */
   private val JobPins: Map[String, Int] = Map(
     "merge" -> 5,
@@ -193,12 +241,20 @@ class LakeJobCountSpec extends AnyFunSuite with SparkSpec {
     "mergeDvCdf" -> 15,
     "mergeDvInsert" -> 3,
     "updateDv" -> 3,
-    "deleteDv" -> 5,
+    "deleteDv" -> 3,
     "updateDvCdf" -> 4,
-    "deleteDvCdf" -> 6,
+    "deleteDvCdf" -> 4,
     "mergeActions" -> 8,
     "mergeActionsDv" -> 11,
-    "mergeActionsDvDelete" -> 12,
+    "mergeActionsDvDelete" -> 10,
     "deleteKeys" -> 9,
-    "replaceWhere" -> 4)
+    "replaceWhere" -> 4,
+    "replaceWhereInside" -> 2,
+    "replaceWhereInsideBoth" -> 2,
+    "compact" -> 3,
+    "compactWhere" -> 3,
+    "compactZOrder" -> 5,
+    "compactPartitionedBy" -> 2,
+    "compactBloom" -> 5,
+    "compactZOrderBloom" -> 7)
 }

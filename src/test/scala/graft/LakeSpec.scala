@@ -948,6 +948,30 @@ class LakeSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("z-order compaction keeps Bloom point-lookup skipping, like compact") {
+    import spark.implicits._
+    def bloomTable(): String = {
+      val path = freshTable()
+      def evens(lo: Long, hi: Long) =
+        (lo to hi by 2).map(i => (i, i * 10)).toDF("id", "v")
+      GraftLake.create(evens(2L, 100L), path, Some("id"), bloomCols = Seq("id"))
+      GraftLake.append(evens(102L, 200L), path, Some("id"), bloomCols = Seq("id"))
+      path
+    }
+    val compacted = bloomTable()
+    GraftLake.compact(spark, compacted, Seq("id"), numFiles = 1, Some("id"))
+    val zordered = bloomTable()
+    GraftLake.compactZOrder(spark, zordered, "id", "v", numFiles = 1)
+    Seq("compact" -> compacted, "compactZOrder" -> zordered).foreach {
+      case (how, path) =>
+        // 101 is odd, so the rewritten set's Bloom rules it out.
+        val (_, scanned, skipped) = GraftLake.readPoint(spark, path, "id", 101L)
+        assert((scanned, skipped) == (0, 1), s"after $how")
+        val (df, _, _) = GraftLake.readPoint(spark, path, "id", 100L)
+        assert(df.filter(col("id") === 100L).count() == 1L, s"after $how")
+    }
+  }
+
   test("vacuum reclaims merged-away sets; latest survives, old snapshots don't") {
     val path = freshTable()
     val orders = Tables.orders(spark, sf)

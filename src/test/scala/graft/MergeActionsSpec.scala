@@ -2,7 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.sql.catalyst.plans.FullOuter
+import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.GraftLake
@@ -182,18 +187,29 @@ class MergeActionsSpec extends AnyFunSuite with SparkSpec {
       (1L to 10L).map(i => (i, i % 2, i * 10)).toDF("id", "grp", "v"),
       path, Some("id"))
     GraftLake.enableCdf(path) // all 6 consumers in play
-    GraftLake.mergeActions(spark, path,
-      Seq((5L, 500L), (11L, 1100L)).toDF("id", "sv"), Seq("id"), "id", Seq(
+    val src = Seq((5L, 500L), (11L, 1100L)).toDF("id", "sv")
+    // Every query execution the merge runs, by its optimized plan: the
+    // full-outer join must appear in exactly one — the checkpoint that
+    // materializes it. A consumer (survivors, inserts, CDF images)
+    // re-deriving the join would be a second.
+    val joinRuns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.optimizedPlan.collect {
+            case j: Join if j.joinType == FullOuter => j
+          }.nonEmpty) joinRuns.add(funcName)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    TestListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      GraftLake.mergeActions(spark, path, src, Seq("id"), "id", Seq(
         MergeClause("matched", "update", None, Seq("v" -> "s.sv")),
         MergeClause("notMatched", "insert", None,
           Seq("id" -> "s.id", "grp" -> "9", "v" -> "s.sv"))))
-    // The frame every consumer (survivors, inserts, CDF images) built
-    // on contains NO join node — it is a materialized checkpoint, so
-    // the full-outer join physically ran exactly once.
-    val plan = GraftLake.lastMergeActionsJoin.get.queryExecution.optimizedPlan
-    assert(plan.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-    }.isEmpty, s"join recomputed: $plan")
+      TestListenerBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(joinRuns.size == 1, s"full-outer join executions: $joinRuns")
     // And the merge itself still landed correctly.
     val got = GraftLake.read(spark, path).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toMap
