@@ -69,9 +69,9 @@ object Bench {
       Console.out.flush()
       // Also persist the line: console tails can truncate the per-query
       // map past ~60 entries, losing numbers the round report needs.
-      // A SPARK_GRAFT_ONLY-restricted run (bench_control.py's subset
-      // measurement) must NOT clobber the committed full-run artifact —
-      // it stamps a sibling file instead.
+      // A SPARK_GRAFT_ONLY-restricted (subset) run must NOT clobber
+      // the committed full-run artifact — it stamps a sibling file
+      // instead.
       val target = if (only.isDefined) "bench_subset_last.json" else "bench_last.json"
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(target), line + "\n")

@@ -97,7 +97,9 @@ object GraftLake {
       // and its add/remove lists. The mutation fence treats these as
       // held locks (a racing rewrite of a pending-removed set, or a
       // racing mask race against a pending mask, must wait for the
-      // decision) — aborted txns resolve with these EMPTY.
+      // decision). An ABORTED txn resolves with no action and no
+      // removes; its add list stays in `heldAdds` as vacuum's list of
+      // dead staged sets.
       heldAction: String = "",
       heldAdds: Seq[String] = Seq.empty,
       heldRemoves: Seq[String] = Seq.empty)
@@ -778,19 +780,14 @@ object GraftLake {
     * Returns the clone's created version (0).
     */
   def shallowClone(srcPath: String, dstPath: String): Int = {
-    val s = snapshot(srcPath)
+    // Clone padd lines must carry RAW stats (see [[stateAt]]).
+    val s = stateAt(srcPath, Int.MaxValue, raw = true)
     require(s.version >= 0, s"no table at $srcPath")
     require(!Files.exists(logDir(dstPath)), s"table already exists: $dstPath")
     require(s.tombstones.isEmpty,
       s"outstanding merge-on-read tombstones at $srcPath: compact before cloning")
     val absSrc = Paths.get(srcPath).toAbsolutePath.normalize.toString
-    // Clone padd lines must carry RAW stats: each LiveSet's own
-    // schemaDdl is its stat-domain tag, and snapshot() serves
-    // day-domain zone maps already scaled to micros — re-publishing
-    // those under the original DATE-era tag would double-scale on the
-    // clone's next fold. The raw fold re-normalizes correctly forever.
-    val perSet = snapshotRaw(srcPath).live
-      .map(ls => ls.copy(set = s"$absSrc/${ls.set}"))
+    val perSet = s.live.map(ls => ls.copy(set = s"$absSrc/${ls.set}"))
     Files.createDirectories(logDir(dstPath))
     // Register BEFORE publishing the clone's commit: if we crash
     // between the two, a stale registration is harmless (expired on
@@ -968,7 +965,8 @@ object GraftLake {
   private def stagePartitionedMulti(
       df: DataFrame, path: String, partCols: Seq[String],
       statsCols: Seq[String],
-      extraPre: Option[Map[Seq[Long], Seq[SetStats]]] = None): Seq[LiveSet] = {
+      extraPre: Option[Map[Seq[Long], Seq[SetStats]]] = None,
+      bloomCols: Seq[String] = Seq.empty): Seq[LiveSet] = {
     import scala.jdk.CollectionConverters._
     require(partCols.nonEmpty, "empty partition layout")
     val stage = Paths.get(path, s"_stage_p${java.util.UUID.randomUUID().toString.take(12)}")
@@ -1016,13 +1014,16 @@ object GraftLake {
       // Per-file count sidecar for the staged leaf set too, so the
       // grouped COUNT(*) pushdown serves per-partition counts with
       // zero read-time footer opens.
-      setRowCount(path, setName)
-      LiveSet(setName, df.schema.toDDL,
+      val rows = setRowCount(path, setName)
+      (LiveSet(setName, df.schema.toDDL,
         partCols.zip(values).map { case (c, v) => SetStats(c, v, v) } ++
-          extra.getOrElse(values, Seq.empty))
+          extra.getOrElse(values, Seq.empty)), rows)
     }
     rmTree(stage)
-    sets
+    if (bloomCols.nonEmpty)
+      writeBloomSidecars(df.sparkSession, path, df.schema,
+        sets.map { case (ls, rows) => ls.set -> rows }, bloomCols)
+    sets.map(_._1)
   }
 
   // ----------------------------------------------------------- constraints
@@ -1992,11 +1993,10 @@ object GraftLake {
     val nRows = setRowCount(path, setName)
     // Bloom sidecars are part of the STAGED set (written before the
     // log names it), so a published set and its point-lookup index
-    // appear atomically together. Sized from the footer-walk count —
-    // no count() job.
-    bloomCols.foreach(c =>
-      writeBloomSidecar(df.sparkSession, path, setName, c, Some(nRows),
-        Some(df.schema)))
+    // appear atomically together.
+    if (bloomCols.nonEmpty)
+      writeBloomSidecars(df.sparkSession, path, df.schema,
+        Seq(setName -> nRows), bloomCols)
     val ridRows =
       if (rowTrackingEnabled(path))
         Some(math.max(nRows, ridMinClaim.getOrElse(0L)))
@@ -2828,10 +2828,12 @@ object GraftLake {
   private val commitCache = new java.util.concurrent.ConcurrentHashMap[
     (String, Int, Long, Long), Commit]()
 
-  private def commitsFrom(path: String, from: Int): Seq[Commit] = {
+  /** Committed commits `from` through `until` (or the log's end). */
+  private[sources] def commitsFrom(
+      path: String, from: Int, until: Int = Int.MaxValue): Seq[Commit] = {
     val dir = logDir(path)
     if (!Files.exists(dir)) return Seq.empty
-    Iterator.from(from)
+    Iterator.from(from).takeWhile(_ <= until)
       .map(v => (v, dir.resolve(f"$v%08d.json")))
       .takeWhile { case (_, f) => Files.exists(f) && Files.size(f) > 0 }
       .map { case (v, f) =>
@@ -2894,9 +2896,9 @@ object GraftLake {
           tag = None, stats = Seq.empty, perSet = Seq.empty, cdf = None,
           ingest = Seq.empty,
           // a PENDING commit still HOLDS its mutation claims — an
-          // aborted one holds nothing
+          // aborted one holds nothing (its adds are dead bytes)
           heldAction = if (decided) "" else c.action,
-          heldAdds = if (decided) Seq.empty else c.add,
+          heldAdds = c.add,
           heldRemoves = if (decided) Seq.empty else c.remove)
       }
   }
@@ -3101,25 +3103,19 @@ object GraftLake {
     * exactly-once-preserving behavior (see [[appendAtomic]]).
     */
   def latestStableVersion(path: String): Int = {
-    val cs = commits(path)
-    cs.find(c => c.txn.exists(txnPending(path, _)))
+    // a checkpoint never holds an undecided commit: scan its suffix
+    val ckpt = readPointer(path)
+    val cs = commitsFrom(path, ckpt + 1)
+    cs.find(undecided(path))
       .map(_.version - 1)
-      .getOrElse(cs.lastOption.map(_.version).getOrElse(-1))
+      .getOrElse(cs.lastOption.fold(ckpt)(_.version))
   }
 
-  /** Fold `cs` (remove, then add, per commit) on top of `base`. A
-    * `tombstone` commit's added set is NOT data — it holds deleted
-    * keys and folds into `tombstones`. Every commit carries the full
-    * current schema, so the last one folded wins `schemaDdl`.
+  /** True for a commit whose transaction is undecided: resolved as a
+    * pending no-op, or this thread's own provisional commit.
     */
-  /** Every folded state is served DOMAIN-NORMALIZED: see
-    * [[normalizeStatDomains]]. The checkpoint writer is the one
-    * consumer that must see raw stats ([[foldStateRaw]] /
-    * [[snapshotRaw]]) — baking scaled numbers next to the original
-    * per-set schema would double-scale on reload.
-    */
-  private def foldState(base: Snapshot, cs: Seq[Commit]): Snapshot =
-    normalizeStatDomains(foldStateRaw(base, cs))
+  private def undecided(path: String)(c: Commit): Boolean =
+    c.heldAction.nonEmpty || c.txn.exists(txnPending(path, _))
 
   private val MicrosPerDay = 86400000000L
 
@@ -3166,6 +3162,12 @@ object GraftLake {
     })
   }
 
+  /** Fold `cs` (remove, then add, per commit) on top of `base`. A
+    * `tombstone` commit's added set is NOT data — it holds deleted
+    * keys and folds into `tombstones`. Every commit carries the full
+    * current schema, so the last one folded wins `schemaDdl`. Stats
+    * stay raw: [[stateAt]] normalizes them on the way out.
+    */
   private def foldStateRaw(base: Snapshot, cs: Seq[Commit]): Snapshot =
     cs.foldLeft(base) { (s, c) =>
       // Constraint commits carry rules, not file-sets: `add` holds
@@ -3250,11 +3252,7 @@ object GraftLake {
       } else {
         val keptLive = s.live.filterNot(ls => c.remove.contains(ls.set))
         val keptTombs = s.tombstones.filterNot(c.remove.contains)
-        // Partitioned commits carry per-set manifests; ordinary
-        // commits share the commit-level stats across their one set.
-        val added =
-          if (c.perSet.nonEmpty) c.perSet
-          else c.add.map(a => LiveSet(a, c.schemaDdl, c.stats))
+        val added = addedSets(c)
         val (live, tombs) =
           if (c.action == "tombstone") (keptLive, keptTombs ++ c.add)
           // updatedv: add = Seq(dvSidecar, dataSet...) — the sidecar
@@ -3264,41 +3262,64 @@ object GraftLake {
             (keptLive ++ c.add.tail.map(a => LiveSet(a, c.schemaDdl, c.stats)),
               keptTombs :+ c.add.head)
           else (keptLive ++ added, keptTombs)
-        Snapshot(c.version, c.schemaDdl, live, tombs,
-          c.tag.fold(s.tags)(t => s.tags + (t -> c.version)),
-          math.max(s.tsMillis, c.tsMillis), s.constraints,
+        // copy: the claims of pending transactions outlive later commits
+        s.copy(version = c.version, schemaDdl = c.schemaDdl, live = live,
+          tombstones = tombs,
+          tags = c.tag.fold(s.tags)(t => s.tags + (t -> c.version)),
+          tsMillis = math.max(s.tsMillis, c.tsMillis),
           // overwrite resets the schema and drops every live set, so
           // no pre-overwrite file can need lineage resolution — and
           // STALE lineage would misresolve a former name that
           // legitimately reappears in a post-overwrite schema.
-          if (c.action == "overwrite") Map.empty else s.renames,
-          s.partitionCols,
-          s.ingested ++ c.ingest,
-          s.defaults, s.generated,
-          (s.ridHighWater +: added.flatMap(_.statsFor(RidStat))
-            .map(_.max + 1L)).max,
-          s.identities, s.identityDefaults)
+          renames = if (c.action == "overwrite") Map.empty else s.renames,
+          ingested = s.ingested ++ c.ingest,
+          ridHighWater = (s.ridHighWater +: added.flatMap(_.statsFor(RidStat))
+            .map(_.max + 1L)).max)
       }
     }
 
-  /** The LATEST table state, resolved in O(checkpoint + log suffix):
-    * start from the last checkpoint (if any) and fold only the
-    * commits after it. Without checkpoints every snapshot resolution
-    * replays the whole log — O(commits) stats + parses per read,
-    * the wall a long-lived table hits at Delta-scale commit counts.
-    * Version -1 = no table.
+  /** The sets a data commit adds: partitioned commits carry per-set
+    * manifests; ordinary commits share the commit-level stats across
+    * their sets.
     */
-  def snapshot(path: String): Snapshot = {
-    val base = loadCheckpoint(path).getOrElse(EmptySnapshot)
-    foldState(base, commitsFrom(path, base.version + 1))
+  private def addedSets(c: Commit): Seq[LiveSet] =
+    if (c.perSet.nonEmpty) c.perSet
+    else c.add.map(a => LiveSet(a, c.schemaDdl, c.stats))
+
+  /** The LATEST table state (version -1 = no table). */
+  def snapshot(path: String): Snapshot = stateAt(path, Int.MaxValue)
+
+  /** THE state resolver: the table as of `version` (as of the log's
+    * end when it is shorter), behind every versioned read. It folds
+    * the log suffix onto the `_last_checkpoint` state when that
+    * checkpoint is at or below `version` and onto the empty state
+    * otherwise — Delta's checkpoint-plus-replay rule — so a recent
+    * version costs O(checkpoint + suffix), not O(commits).
+    *
+    * Stats stay raw through the fold and are domain-normalized
+    * ([[normalizeStatDomains]]) at this one exit. `raw` skips that for
+    * the consumers that re-publish sets under their own per-set
+    * schemas — the checkpoint writer, shallow clones, restore — where
+    * scaled numbers next to a DATE-era schema tag would scale again on
+    * the next fold.
+    */
+  private[sources] def stateAt(
+      path: String, version: Int, raw: Boolean = false): Snapshot = {
+    val (base, cs) = logSegment(path, version)
+    val s = foldStateRaw(base, cs)
+    if (raw) s else normalizeStatDomains(s)
   }
 
-  /** [[snapshot]] WITHOUT domain normalization — checkpoint-writer
-    * only (see [[foldState]]).
+  /** The base and the commits [[stateAt]] folds for `version`: the
+    * checkpoint when it is at or below `version`, else the empty
+    * state, and the commits after that base through `version`.
     */
-  private def snapshotRaw(path: String): Snapshot = {
-    val base = loadCheckpoint(path).getOrElse(EmptySnapshot)
-    foldStateRaw(base, commitsFrom(path, base.version + 1))
+  private def logSegment(path: String, version: Int): (Snapshot, Seq[Commit]) = {
+    val ckpt = readPointer(path)
+    val base =
+      if (ckpt >= 0 && ckpt <= version) loadCheckpoint(path, ckpt)
+      else EmptySnapshot
+    (base, commitsFrom(path, base.version + 1, version))
   }
 
   /** Snapshot if the table exists; None for an uncreated path. */
@@ -3326,16 +3347,17 @@ object GraftLake {
     // which replaces that log prefix, would have silently dropped its
     // file-set forever. Committed/aborted decisions are stable and
     // bake fine; pending refuses loudly until decided.
-    val pendingTxn = commits(path).filter(c =>
-      c.txn.exists(txnPending(path, _)))
+    // The check reads the same commits the fold below bakes, so a
+    // decision landing in between cannot slip a no-op in.
+    val (base, cs) = logSegment(path, Int.MaxValue)
+    val pendingTxn = cs.filter(undecided(path))
     require(pendingTxn.isEmpty,
       s"cannot checkpoint $path: pending cross-table transaction " +
         s"commit(s) at version(s) ${pendingTxn.map(_.version).mkString(",")}" +
         " — commitTxn/abortTxn them first")
     // RAW fold: each ckptset line pairs stats with the set's own
-    // schema, so they must stay in that schema's domain — baking the
-    // normalized (scaled) numbers would double-scale on reload.
-    val s = snapshotRaw(path)
+    // schema, so they must stay in that schema's domain (see [[stateAt]]).
+    val s = foldStateRaw(base, cs)
     require(s.version >= 0, s"no table at $path")
     val tagItems = s.tags.toSeq.sortBy(_._2).map { case (t, v) => s"$v:$t" }
     val lines =
@@ -3404,9 +3426,7 @@ object GraftLake {
     if (Files.exists(p)) Files.readString(p).trim.toInt else -1
   }
 
-  private def loadCheckpoint(path: String): Option[Snapshot] = {
-    val v = readPointer(path)
-    if (v < 0) return None
+  private def loadCheckpoint(path: String, v: Int): Snapshot = {
     val lines = Files.readString(ckptFile(path, v)).split("\n").toSeq
     val head = parse(lines.head)
     require(head.action == "checkpoint" && head.version == v,
@@ -3441,7 +3461,7 @@ object GraftLake {
     val ridHw = body.filter(_.action == "ckptrid")
       .flatMap(_.stats.headOption).map(_.max)
       .foldLeft(0L)(math.max)
-    Some(Snapshot(head.version, head.schemaDdl, live, head.remove, tags,
+    Snapshot(head.version, head.schemaDdl, live, head.remove, tags,
       head.tsMillis, cons, rens, part, ing, defMap("d:"), defMap("g:"),
       ridHw,
       defMap("i:").map { case (cn, v) =>
@@ -3450,7 +3470,7 @@ object GraftLake {
       },
       defMap("i:").collect {
         case (cn, v) if v.split(",").lift(2).contains("d") => cn
-      }.toSet))
+      }.toSet)
   }
 
   /** Auto-checkpoint cadence (every N commits, Delta-style; 0
@@ -3477,11 +3497,9 @@ object GraftLake {
     * minus any merge-on-read tombstoned keys live at that version.
     */
   def readAt(spark: SparkSession, path: String, version: Int): DataFrame = {
-    val all = commits(path)
-    require(version >= 0 && version < all.size,
-      s"version $version not in [0, ${all.size - 1}] for $path")
-    val upTo = all.take(version + 1)
-    val st = foldState(EmptySnapshot, upTo)
+    val st = stateAt(path, version)
+    require(version >= 0 && st.version == version,
+      s"version $version not in [0, ${latestVersion(path)}] for $path")
     val target = StructType.fromDDL(st.schemaDdl)
     assembleSets(spark, path, st.live, target, st.renames, st.tombstones)(
       emptyFrame(spark, target))
@@ -3977,37 +3995,38 @@ object GraftLake {
     }.distinct
   }
 
-  private def writeBloomSidecar(
-      spark: SparkSession, table: String, set: String, c: String,
-      knownRows: Option[Long] = None,
-      writtenSchema: Option[StructType] = None): Unit = {
-    import graft.plans.GraftBloom
-    // The writer knows the staged set's schema — passing it skips the
-    // distributed footer-inference job a bare parquet read launches.
-    val written = writtenSchema
-      .map(st => spark.read.schema(st).parquet(s"$table/$set"))
-      .getOrElse(spark.read.parquet(s"$table/$set"))
+  /** Bloom sidecars on `cols` for staged sets of one written `schema`,
+    * given with their row counts (the `_ridmap` footer walk's, so no
+    * count job): ONE aggregate grouped by set over the WRITTEN files
+    * builds every filter, sized for the largest set. Reading with the
+    * known schema skips the footer-inference job a bare read launches.
+    */
+  private def writeBloomSidecars(
+      spark: SparkSession, table: String, schema: StructType,
+      sets: Seq[(String, Long)], cols: Seq[String]): Unit = {
     // An empty bloom from an all-null cast would wrongly prune live
     // data — only integral key columns may carry a bloom.
-    written.schema(c).dataType match {
-      case org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.IntegerType => ()
+    cols.foreach(c => schema(c).dataType match {
+      case LongType | IntegerType => ()
       case other => throw new IllegalArgumentException(
         s"bloom column '$c' must be integral, got $other")
-    }
-    // Sizing count: the commit path already knows the staged row
-    // count from the `_ridmap` footer walk — no count() job then.
-    val n = knownRows.getOrElse(written.count())
-    val words = GraftBloom.wordsFor(n)
-    val bytes = written
-      .agg(graft.functions.VectorFunctions.bloomAgg(
-        col(c).cast("long"), words).as("b"))
-      .head.getAs[Array[Byte]]("b")
-    val b64 = java.util.Base64.getEncoder.encodeToString(bytes)
-    val body = s"""{"col":"$c","words":$words,"k":${GraftBloom.DefaultK},""" +
-      s""""bits":"$b64""""
-    Files.write(bloomSidecar(table, set, c),
-      (body + s""","crc":${crc32(body)}}""").getBytes(UTF_8))
+    })
+    import graft.plans.GraftBloom
+    val words = GraftBloom.wordsFor(sets.map(_._2).max)
+    val blooms = cols.map(c => graft.functions.VectorFunctions.bloomAgg(
+      col(c).cast("long"), words))
+    sets.indices.map(i => spark.read.schema(schema)
+        .parquet(setPath(table, sets(i)._1)).withColumn("__set", lit(i)))
+      .reduce(_.unionByName(_))
+      .groupBy("__set").agg(blooms.head, blooms.tail: _*)
+      .collect().foreach(r => cols.indices.foreach { j =>
+        val b64 = java.util.Base64.getEncoder.encodeToString(
+          r.getAs[Array[Byte]](j + 1))
+        val body = s"""{"col":"${cols(j)}","words":$words,""" +
+          s""""k":${GraftBloom.DefaultK},"bits":"$b64""""
+        Files.write(bloomSidecar(table, sets(r.getInt(0))._1, cols(j)),
+          (body + s""","crc":${crc32(body)}}""").getBytes(UTF_8))
+      })
   }
 
   /** The set's bloom for `c`, if present AND intact. A missing or
@@ -4063,173 +4082,160 @@ object GraftLake {
     (df, scan.size, skip.size)
   }
 
-  /** CHANGES feed (CDC, insert-only): the rows added by every commit
-    * AFTER `fromVersion`, each tagged `_commit_version` — the
+  /** What one commit gives a change feed (see [[feedRows]]). */
+  private[sources] sealed trait FeedRows
+  /** The commit's added sets, served as inserts. */
+  private[sources] final case class FeedInserts(sets: Seq[LiveSet]) extends FeedRows
+  /** The commit's change-data sidecar: typed rows, `_change_type` in
+    * the files.
+    */
+  private[sources] final case class FeedSidecar(set: LiveSet) extends FeedRows
+  /** The sets the commit removed, served as deletes. */
+  private[sources] final case class FeedDeletes(sets: Seq[LiveSet]) extends FeedRows
+  private[sources] case object FeedNothing extends FeedRows
+
+  /** THE change-feed contract: what commit `c` gives every feed
+    * surface — the batch feeds [[changesSince]] (insert-only) and
+    * [[changesTyped]] (CDF), and the `graft-lake-stream` source
+    * ([[LakeMicroBatchStream]]) in its insert-only default and its
+    * `cdf` mode. Each surface serves the answer for each commit after
+    * its start version, or fails loudly at the first refusal:
+    *
+    *  - `create`, `append`, `copyinto`, and a `padd` that removes
+    *    nothing (partitioned append, shallow clone): the added sets,
+    *    as inserts, in both modes;
+    *  - `merge`, `update`, `delete`, `tombstone` (deleteMoR/deleteDv),
+    *    `updatedv`, `restore`, `poverwrite`: CDF mode serves the
+    *    commit's change-data sidecar; a commit from before CDF was
+    *    enabled, or one whose sidecar was vacuumed, refuses. Insert-
+    *    only mode refuses: rows changed in place are not inserts;
+    *  - `truncate`: CDF mode serves the removed sets as deletes (a
+    *    vacuumed one refuses, and so does the stream when one was
+    *    written before a column rename); insert-only mode refuses;
+    *  - `compact`, and a `padd` that removes sets
+    *    (compactPartitionedBy): a re-layout with no logical change —
+    *    no rows in CDF mode, a refusal in insert-only mode;
+    *  - `constraint`, `evolve`, `coldef`, `partition`, `vacuum` and
+    *    `txnnoop` (an aborted transaction's slot): metadata, no rows;
+    *  - `rename`, `lineage`, `dropcol`: no rows on the batch feeds,
+    *    which read every set through the latest column lineage; the
+    *    stream decodes each file by its written column names, so it
+    *    refuses rather than serve rows the batch feeds would not;
+    *  - `overwrite`, and any other action: refused — re-seed from a
+    *    snapshot.
+    *
+    * A commit of an undecided transaction refuses on every surface:
+    * a consumer that moved past it would lose its rows for good if the
+    * transaction then commits (bound reads at [[latestStableVersion]],
+    * as the stream does).
+    */
+  private[sources] def feedRows(
+      path: String, c: Commit, cdf: Boolean, stream: Boolean): FeedRows = {
+    val reseed =
+      if (stream) "restart from a fresh snapshot"
+      else "read a full snapshot instead"
+    def refuse(why: String): Nothing = throw new IllegalStateException(
+      s"commit ${c.version} is a ${c.action}: $why — $reseed")
+    def unlessVacuumed(ls: LiveSet, what: String): LiveSet = {
+      require(Files.exists(Paths.get(setPath(path, ls.set))),
+        s"commit ${c.version}'s $what ${ls.set} was vacuumed (outside " +
+          "the retention window) — start the feed from a newer version " +
+          s"or $reseed")
+      ls
+    }
+    val unrepresentable =
+      "not representable " + (if (cdf) "in the change feed" else "as inserts")
+    if (undecided(path)(c)) throw new IllegalStateException(
+      s"commit ${c.version} at $path is a PENDING cross-table " +
+        "transaction — its visibility is undecided; retry after " +
+        "commitTxn/abortTxn (or bound reads at latestStableVersion)")
+    c.action match {
+      case "create" | "append" | "copyinto" => FeedInserts(addedSets(c))
+      case "padd" if c.remove.isEmpty => FeedInserts(addedSets(c))
+      case "compact" | "padd" =>
+        if (cdf) FeedNothing else refuse(unrepresentable)
+      case "merge" | "update" | "delete" | "tombstone" | "updatedv" |
+          "restore" | "poverwrite" =>
+        if (!cdf) refuse(unrepresentable)
+        val sidecar = c.cdf.getOrElse(refuse("no change-data sidecar " +
+          "(CDF was not enabled when it committed)"))
+        FeedSidecar(unlessVacuumed(LiveSet(sidecar, StructType.fromDDL(
+          c.schemaDdl).add("_change_type", StringType, nullable = true).toDDL,
+          Seq.empty), "change-data sidecar"))
+      case "truncate" =>
+        if (!cdf) refuse(unrepresentable)
+        val pre = stateAt(path, c.version - 1)
+        val removed = c.remove.toSet
+        val sets = pre.live.filter(ls => removed(ls.set))
+          .map(unlessVacuumed(_, "truncated set"))
+        val live = StructType.fromDDL(pre.schemaDdl).fieldNames.toSet
+        val formers = pre.renames.filter(r => live(r._1)).values.flatten.toSet
+        if (stream && sets.exists(ls =>
+            StructType.fromDDL(ls.schemaDdl).fieldNames.exists(formers)))
+          refuse("not representable in a stream, which decodes each file " +
+            "by its written column names: a truncated set predates a rename")
+        FeedDeletes(sets)
+      case "rename" | "lineage" | "dropcol" =>
+        if (stream) refuse("not representable in a stream, which " +
+          "decodes each file by its written column names")
+        FeedNothing
+      case "constraint" | "evolve" | "coldef" | "partition" | "vacuum" |
+          "txnnoop" => FeedNothing
+      case _ => refuse(unrepresentable)
+    }
+  }
+
+  /** CHANGES feed (CDC, insert-only): the rows every commit AFTER
+    * `fromVersion` added, each tagged `_commit_version` — the
     * incremental-read primitive a downstream pipeline polls instead
     * of re-scanning the table (pair it with mv01's mergeDelta and the
     * refresh loop is end-to-end incremental). Reading a commit's
-    * changes costs one scan of THAT commit's file-set only.
-    *
-    * Only create/append commits are representable as row inserts;
-    * merge/overwrite rewrite data and need row-level diffing this
-    * format does not record — they fail loudly rather than emit a
-    * wrong feed.
+    * changes costs one scan of THAT commit's file-sets only. Which
+    * commits serve rows, and which refuse, is [[feedRows]].
     */
-  def changesSince(spark: SparkSession, path: String, fromVersion: Int): DataFrame = {
-    val all = commits(path)
-    require(fromVersion >= -1 && fromVersion < all.size,
-      s"fromVersion $fromVersion out of range for ${all.size}-commit log")
-    // A PENDING transaction commit in the range must refuse, never
-    // skip: an incremental consumer that advanced its cursor past a
-    // pending commit would permanently lose its rows if the
-    // transaction later commits (the batch dual of the streaming
-    // source's latestStableVersion stall). Aborted ones are decided —
-    // permanent no-ops — and pass through as empty.
-    all.drop(fromVersion + 1)
-      .find(c => c.txn.exists(txnPending(path, _))).foreach { c =>
-        throw new IllegalStateException(
-          s"commit ${c.version} at $path is a PENDING cross-table " +
-            "transaction — its visibility is undecided; retry after " +
-            "commitTxn/abortTxn (or bound reads at latestStableVersion)")
-      }
-    val folded = foldState(EmptySnapshot, all)
-    // The fold's schema, NOT the last commit line's: a pending/aborted
-    // transaction's txnnoop still carries the schema the transaction
-    // WOULD have evolved to, which the table never committed.
-    val target = StructType.fromDDL(folded.schemaDdl)
-    val latestRenames = folded.renames
-    val changed0 = all.drop(fromVersion + 1)
-    changed0.find(c => c.action != "create" && c.action != "append" &&
-        c.action != "padd" && c.action != "constraint" &&
-        c.action != "rename" && c.action != "lineage" &&
-        c.action != "dropcol" && c.action != "evolve" &&
-        c.action != "vacuum" && c.action != "txnnoop").foreach { c =>
-      throw new IllegalStateException(
-        s"commit ${c.version} is a ${c.action}: not representable as inserts — " +
-          "read a full snapshot instead")
-    }
-    // Constraint/rename/lineage/evolve commits add rules/metadata, not
-    // rows; a txnnoop (aborted/pending cross-table transaction) holds
-    // a version slot and nothing else.
-    val changed = changed0.filter(c =>
-      c.action != "constraint" && c.action != "rename" &&
-      c.action != "lineage" && c.action != "dropcol" &&
-      c.action != "evolve" && c.action != "vacuum" &&
-      c.action != "txnnoop")
-    val parts = changed.flatMap { c =>
-      // A partitioned append is insert-only too: one part per set.
-      val sets =
-        if (c.perSet.nonEmpty) c.perSet
-        else Seq(LiveSet(c.add.head, c.schemaDdl, c.stats))
-      sets.map(ls => readSet(spark, path, ls, target, latestRenames)
-        .withColumn("_commit_version", lit(c.version)))
-    }
-    parts.reduceLeftOption(_.unionByName(_))
-      .getOrElse(readAt(spark, path, all.size - 1).limit(0)
-        .withColumn("_commit_version", lit(0)))
-  }
+  def changesSince(spark: SparkSession, path: String, fromVersion: Int): DataFrame =
+    changeFeed(spark, path, fromVersion, cdf = false)
 
   /** TYPED CHANGES feed — the row-level CHANGE DATA FEED (Delta CDF):
     * every commit AFTER `fromVersion` as typed change rows, current
     * schema plus `_change_type` (insert / update_preimage /
-    * update_postimage / delete) and `_commit_version`.
-    *
-    *  - create/append/padd commits serve their added rows as inserts
-    *    (one scan of that commit's sets only, like [[changesSince]]);
-    *  - merge/delete/deleteMoR commits serve their staged `cdf/...`
-    *    sidecar — O(changed rows), never a table diff. A mutation
-    *    committed BEFORE [[enableCdf]] has no sidecar and fails
-    *    loudly (not retroactive, exactly like Delta);
-    *  - compact commits are physical re-layout — no logical change,
-    *    no rows;
-    *  - overwrite resets the table and is not representable — loud
-    *    error; downstream consumers re-seed from a snapshot.
+    * update_postimage / delete) and `_commit_version`; what each
+    * commit serves is [[feedRows]]. Change rows are O(changed rows),
+    * never a table diff.
     *
     * A downstream mirror applies the feed per key: rank each key's
     * changes by (_commit_version, preimage-last), keep the latest,
     * drop it if typed delete — see the src28 gate for the shape.
     */
-  /** The removed DATA sets of commit `version`, resolved to LiveSets
-    * from the PRE-commit fold — what a truncate's CDF delete images
-    * read. Tombstone names in the remove list are excluded (they hold
-    * keys/positions, not table rows).
-    */
-  private[sources] def removedDataSetsAt(
-      path: String, version: Int): Seq[LiveSet] = {
-    val all = commits(path)
-    require(version >= 0 && version < all.size, s"no commit $version at $path")
-    val pre = foldState(EmptySnapshot, all.take(version))
-    val removed = all(version).remove.toSet
-    pre.live.filter(ls => removed(ls.set))
-  }
-
   def changesTyped(
-      spark: SparkSession, path: String, fromVersion: Int): DataFrame = {
-    val all = commits(path)
-    require(fromVersion >= -1 && fromVersion < all.size,
-      s"fromVersion $fromVersion out of range for ${all.size}-commit log")
-    // Same pending-transaction refusal as [[changesSince]]: skipping
-    // an undecided commit would lose its change rows forever.
-    all.drop(fromVersion + 1)
-      .find(c => c.txn.exists(txnPending(path, _))).foreach { c =>
-        throw new IllegalStateException(
-          s"commit ${c.version} at $path is a PENDING cross-table " +
-            "transaction — its visibility is undecided; retry after " +
-            "commitTxn/abortTxn (or bound reads at latestStableVersion)")
-      }
-    val folded = foldState(EmptySnapshot, all)
-    val target = StructType.fromDDL(folded.schemaDdl)
-    val latestRenames = folded.renames
-    val parts = all.drop(fromVersion + 1).flatMap { c =>
-      c.action match {
-        case "create" | "append" | "padd" =>
-          val sets =
-            if (c.perSet.nonEmpty) c.perSet
-            else Seq(LiveSet(c.add.head, c.schemaDdl, c.stats))
-          sets.map(ls => readSet(spark, path, ls, target, latestRenames)
-            .withColumn("_change_type", lit("insert"))
-            .withColumn("_commit_version", lit(c.version)))
-        case "merge" | "update" | "delete" | "tombstone" | "restore" |
-            "updatedv" | "poverwrite" =>
-          val cdfName = c.cdf.getOrElse(throw new IllegalStateException(
-            s"commit ${c.version} is a ${c.action} with no change-data " +
-              "sidecar (CDF was not enabled when it committed) — read a " +
-              "full snapshot instead"))
-          require(Files.exists(Paths.get(setPath(path, cdfName))),
-            s"commit ${c.version}'s change-data sidecar was vacuumed " +
-              "(outside the retention window) — start the feed from a " +
-              "newer version or read a full snapshot")
-          val ownCdf = StructType.fromDDL(c.schemaDdl)
-            .add("_change_type", StringType, nullable = true)
-          val targetCdf = target.add("_change_type", StringType, nullable = true)
-          Seq(readSet(spark, path,
-            LiveSet(cdfName, ownCdf.toDDL, Seq.empty), targetCdf, latestRenames)
-            .withColumn("_commit_version", lit(c.version)))
-        // TRUNCATE: delete images come from reading the REMOVED sets
-        // at feed-read time (Delta's file-level remove — zero bytes
-        // staged at truncate time); vacuumed sets refuse loudly, like
-        // reclaimed sidecars.
-        case "truncate" =>
-          val removed = removedDataSetsAt(path, c.version)
-          removed.foreach(ls => require(
-            Files.exists(Paths.get(setPath(path, ls.set))),
-            s"commit ${c.version}'s truncated set ${ls.set} was vacuumed " +
-              "(outside the retention window) — start the feed from a " +
-              "newer version or read a full snapshot"))
-          removed.map(ls => readSet(spark, path, ls, target, latestRenames)
-            .withColumn("_change_type", lit("delete"))
-            .withColumn("_commit_version", lit(c.version)))
-        case "compact" | "constraint" | "rename" | "lineage" | "dropcol" |
-            "evolve" | "vacuum" | "coldef" | "txnnoop" => Seq.empty
-        case other => throw new IllegalStateException(
-          s"commit ${c.version} is a $other: not representable in the " +
-            "change feed — read a full snapshot instead")
-      }
+      spark: SparkSession, path: String, fromVersion: Int): DataFrame =
+    changeFeed(spark, path, fromVersion, cdf = true)
+
+  /** The batch change feeds: [[feedRows]] per commit, each set read
+    * through [[readSet]] under the latest schema and column lineage.
+    */
+  private def changeFeed(
+      spark: SparkSession, path: String, fromVersion: Int,
+      cdf: Boolean): DataFrame = {
+    val st = snapshot(path)
+    require(fromVersion >= -1 && fromVersion <= st.version,
+      s"fromVersion $fromVersion out of range for ${st.version + 1}-commit log")
+    val target = StructType.fromDDL(st.schemaDdl)
+    val typed = target.add("_change_type", StringType, nullable = true)
+    def rows(ls: LiveSet, change: String): DataFrame = {
+      val df = readSet(spark, path, ls, target, st.renames)
+      if (cdf) df.withColumn("_change_type", lit(change)) else df
     }
-    parts.reduceLeftOption(_.unionByName(_))
-      .getOrElse(readAt(spark, path, all.size - 1).limit(0)
-        .withColumn("_change_type", lit("insert"))
-        .withColumn("_commit_version", lit(0)))
+    commitsFrom(path, fromVersion + 1, st.version).flatMap { c =>
+      (feedRows(path, c, cdf, stream = false) match {
+        case FeedInserts(sets) => sets.map(rows(_, "insert"))
+        case FeedSidecar(ls) => Seq(readSet(spark, path, ls, typed, st.renames))
+        case FeedDeletes(sets) => sets.map(rows(_, "delete"))
+        case FeedNothing => Seq.empty
+      }).map(_.withColumn("_commit_version", lit(c.version)))
+    }.reduceLeftOption(_.unionByName(_))
+      .getOrElse(emptyFrame(spark, (if (cdf) typed else target)
+        .add("_commit_version", IntegerType, nullable = false)))
   }
 
   // --------------------------------------------------------- DML pipeline
@@ -5705,7 +5711,7 @@ object GraftLake {
     val zoneSurvivors = span.span.fold(live) { case (lo, hi) =>
       pruneSets(path, live, Seq((keyCol, lo, hi)))._1
     }
-    // Bloom sidecars hash INTEGRAL values (writeBloomSidecar refuses
+    // Bloom sidecars hash INTEGRAL values (writeBloomSidecars refuses
     // temporal columns), so only integral keys may consult them —
     // temporal keys stop at the zone-map leg above.
     val bloomed: Map[String, (Array[Long], Int)] =
@@ -5904,7 +5910,8 @@ object GraftLake {
     * flat `layout` commits through [[cowRewrite]] (stats dimensions
     * plus `statsCols` and Bloom sidecars re-recorded); `partCols`
     * instead stages one set per partition value tuple with `statsCols`
-    * recorded per partition, as [[appendPartitionedBy]] does. Either
+    * recorded per partition, as [[appendPartitionedBy]] does, and the
+    * Bloom sidecars re-recorded per set. Either
     * way the commit is fenced: a racing commit that rewrote or
     * position-masked a compacted set aborts it
     * (ConcurrentModificationException), and a racing append is
@@ -5920,8 +5927,9 @@ object GraftLake {
     if (partCols.isEmpty)
       return cowRewrite(d, "compact", rows, sets, statsCols,
         materialized = s.tombstones)
-    val perSet = stagePartitionedMulti(rows, path, partCols, statsCols)
     val names = sets.map(_.set)
+    val perSet = stagePartitionedMulti(rows, path, partCols, statsCols,
+      bloomCols = reRecordable(d.target, s.renames, bloomColsOf(path, names)))
     try publishEntry(path, "padd", "", rows.schema, None,
       layoutStats(partCols, perSet), names ++ s.tombstones, None, perSet,
       fence = fenceFor(spark, path, names.toSet, s.tombstones))
@@ -5952,18 +5960,12 @@ object GraftLake {
     * Returns the restore commit's version.
     */
   def restore(spark: SparkSession, path: String, version: Int): Int = {
-    val all = commits(path)
-    require(version >= 0 && version < all.size,
-      s"version $version not in [0, ${all.size - 1}] for $path")
-    val target = foldState(EmptySnapshot, all.take(version + 1))
-    // The re-published padd lines must carry RAW stats: foldState
-    // retags day-domain zone maps to micros, but each LiveSet keeps
-    // its original (possibly DATE-era) schemaDdl as the domain tag —
-    // re-publishing the scaled numbers under that tag would scale
-    // them AGAIN on the next fold (Long overflow, corrupt zone maps).
-    val targetRaw = foldStateRaw(EmptySnapshot, all.take(version + 1))
-    val cur = foldState(EmptySnapshot, all)
+    val cur = snapshot(path)
+    require(version >= 0 && version <= cur.version,
+      s"version $version not in [0, ${cur.version}] for $path")
     if (cur.version == version) return cur.version // no-op
+    // The re-published sets must carry RAW stats (see [[stateAt]]).
+    val target = stateAt(path, version, raw = true)
     require(target.renames.isEmpty && cur.renames.isEmpty,
       s"restore across column-rename lineage at $path is not supported: " +
         "compact to materialize current names first")
@@ -6008,7 +6010,7 @@ object GraftLake {
     }
     publishEntry(path, "restore", "",
       StructType.fromDDL(target.schemaDdl), None, Seq.empty,
-      cur.live.map(_.set), None, perSet = targetRaw.live, cdfSet = cdfSet,
+      cur.live.map(_.set), None, perSet = target.live, cdfSet = cdfSet,
       expectVersion = Some(cur.version))
   }
 
@@ -6058,23 +6060,22 @@ object GraftLake {
       else cs0.indices.find(i =>
         i + 1 >= cs0.size || cs0(i + 1).tsMillis > cutoff)
         .getOrElse(cs0.size - 1)
-    val keep = scala.collection.mutable.Set[String]()
-    var st = EmptySnapshot
-    cs0.foreach { c =>
-      st = foldState(st, Seq(c))
-      if (c.version >= vMin) {
-        keep ++= st.live.map(_.set); keep ++= st.tombstones
-      }
-    }
-    keep ++= cloneFence(path)
+    // every version from vMin on: its state, then one commit at a time
+    val keep = cs0.drop(vMin + 1)
+      .scanLeft(stateAt(path, vMin, raw = true))((st, c) => foldStateRaw(st, Seq(c)))
+      .flatMap(st => st.live.map(_.set) ++ st.tombstones).toSet ++
+      cloneFence(path)
     val removedEver = cs0.flatMap(_.remove).toSet
     // Sets added by ABORTED cross-table transaction commits: the
-    // resolve pass strips their add lists (permanent no-ops), so the
-    // removedEver rule can never name them — but their decision is
-    // stable, so the bytes are dead the moment the abort-path cleanup
-    // missed them (coordinator died; abortTxn decided later). PENDING
-    // transactions are NOT candidates: their sets may yet go live.
-    val abortedSets = abortedTxnSets(path)
+    // resolve pass moves their add lists to `heldAdds` (permanent
+    // no-ops), so the removedEver rule can never name them — but their
+    // decision is stable, so the bytes are dead the moment the
+    // abort-path cleanup missed them (coordinator died; abortTxn
+    // decided later). PENDING transactions are NOT candidates: their
+    // sets may yet go live.
+    val abortedSets = cs0
+      .filter(c => c.action == "txnnoop" && c.heldAction.isEmpty)
+      .flatMap(_.heldAdds).toSet
     val dataDir = Paths.get(path, "data")
     val dead =
       if (!Files.exists(dataDir)) Seq.empty[java.nio.file.Path]
@@ -6092,24 +6093,6 @@ object GraftLake {
           !keepCdf(s"cdf/${p.getFileName}"))
     }
     (dead, cdfDead)
-  }
-
-  /** Raw add lists of commits whose transaction decided ABORTED —
-    * read from the log lines directly, because [[resolveTxn]] strips
-    * them before any fold can see the names.
-    */
-  private def abortedTxnSets(path: String): Set[String] = {
-    val dir = logDir(path)
-    if (!Files.exists(dir)) return Set.empty
-    Iterator.from(0)
-      .map(v => dir.resolve(f"$v%08d.json"))
-      .takeWhile(f => Files.exists(f) && Files.size(f) > 0)
-      .flatMap { f =>
-        val c = parse(Files.readString(f).split("\n").head)
-        if (c.txn.exists(t => txnDecision(path, t).contains("aborted")))
-          c.add
-        else Seq.empty
-      }.toSet
   }
 
   /** VACUUM DRY RUN (Delta's `VACUUM ... DRY RUN`): list what a sweep

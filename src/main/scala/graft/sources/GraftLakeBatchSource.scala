@@ -632,35 +632,9 @@ private[sources] class GraftLakeBatchScan(
     }
 
   /** All file partitions of one set (per-file granularity). */
-  private def setFilePartitions(ls: GraftLake.LiveSet): Seq[LakeFilePartition] = {
-    import java.nio.file.{Files, Paths}
-    // setPathOf, not a raw join: a SHALLOW CLONE's sets are absolute
-    // paths into the source table
-    val dir = Paths.get(GraftLake.setPathOf(path, ls.set))
-    val top = Files.list(dir).iterator().asScala.toSeq
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .sortBy(_.toString)
-    if (top.nonEmpty)
-      top.map(f => LakeFilePartition(f.toString, ls.schemaDdl, -1,
-        dvSet = ls.set, dvDirs = masks.dvDirs))
-    else {
-      // padd set: hive-encoded partition subdirs (one level per
-      // layout column); the values are per-partition constants
-      // absent from the parquet bytes.
-      GraftLake.hiveLeaves(dir).filter(_._2.nonEmpty)
-        .flatMap { case (d, consts) =>
-          val partNames = consts.map(_._1).toSet
-          val written = StructType.fromDDL(ls.schemaDdl)
-          val minusPart =
-            StructType(written.fields.filterNot(f => partNames(f.name)))
-          Files.list(d).iterator().asScala.toSeq
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .sortBy(_.toString)
-            .map(f => LakeFilePartition(f.toString, minusPart.toDDL, -1,
-              constLongs = consts, dvSet = ls.set, dvDirs = masks.dvDirs))
-        }
-    }
-  }
+  private def setFilePartitions(ls: GraftLake.LiveSet): Seq[LakeFilePartition] =
+    LakeFilePartition.ofSet(path, ls)
+      .map(_.copy(dvSet = ls.set, dvDirs = masks.dvDirs))
 
   /** Under SPJ, ONE keyed partition per FILE (each `HasPartitionKey`),
     * not one per value tuple: Spark's BatchScanExec groups same-key

@@ -46,16 +46,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    optimizer prunes streaming scans too).
   *  - SCHEMA EVOLUTION: each file-set decodes under its own written
   *    schema; columns added by later commits null-fill, exactly like
-  *    the batch `readSet` path.
-  *  - INSERT-ONLY contract (default): an overwrite/merge/compact
-  *    commit inside the range throws (not representable as inserts) —
-  *    the same rule `changesSince` enforces; stream from a fresh
-  *    snapshot instead.
-  *  - CDF MODE (`option("cdf", "true")`): typed change rows instead —
-  *    appends stream as `_change_type = 'insert'`, merge / update /
-  *    delete / deleteMoR commits stream their staged `cdf/` sidecar
-  *    (Delta CDF's streaming shape); compact and vacuum are empty
-  *    micro-batches; overwrite still requires a re-seed.
+  *    the batch `readSet` path. The stream's schema is the table's as
+  *    of its latest stable version.
+  *  - CONTRACT: insert-only by default, typed change rows with
+  *    `option("cdf", "true")`; what each commit serves in either mode
+  *    is [[GraftLake.feedRows]].
   *
   * Primitive column types (long/int/double/boolean/string/date) cover
   * every lake gate; nested/decimal payloads would extend the same
@@ -66,10 +61,11 @@ class LakeStreamSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val path = options.get("path")
     require(path != null, "graft-lake-stream requires option 'path'")
-    val cs = GraftLake.commits(path)
-    require(cs.nonEmpty, s"no graft-lake table at $path")
+    // not a pending transaction's schema: it may never commit
+    val st = GraftLake.stateAt(path, GraftLake.latestStableVersion(path))
+    require(st.version >= 0, s"no graft-lake table at $path")
     val cdf = options.getBoolean("cdf", false)
-    val full = StructType.fromDDL(cs.last.schemaDdl)
+    val full = StructType.fromDDL(st.schemaDdl)
     val projected = Option(options.get("columns")) match {
       case Some(csv) =>
         val keep = csv.split(",").map(_.trim).filter(_.nonEmpty)
@@ -196,141 +192,19 @@ private[sources] class LakeMicroBatchStream(
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  private def setFiles(set: String): Seq[java.nio.file.Path] = {
-    // setPathOf, not a raw join: a SHALLOW CLONE's sets are absolute
-    // paths into the source table
-    val dir = java.nio.file.Paths.get(GraftLake.setPathOf(path, set))
-    java.nio.file.Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-      .sortBy(_.toString)
-  }
-
-  /** A partitioned-append ("padd") commit's partitions: the partition
-    * column is hive-encoded in each set's directory (`col=value/`),
-    * NOT in the parquet bytes — each file plans under the set schema
-    * MINUS that column, whose value is served as a per-partition
-    * constant parsed from the directory name (the streaming twin of
-    * the batch reader's partition discovery).
-    */
-  private def paddPartitions(
-      c: GraftLake.Commit, change: Option[String]): Seq[InputPartition] = {
-    val sets =
-      if (c.perSet.nonEmpty) c.perSet
-      else Seq(GraftLake.LiveSet(c.add.head, c.schemaDdl, c.stats))
-    sets.flatMap { ls =>
-      val dir = java.nio.file.Paths.get(GraftLake.setPathOf(path, ls.set))
-      val leaves = GraftLake.hiveLeaves(dir).filter(_._2.nonEmpty)
-      require(leaves.nonEmpty,
-        s"padd set ${ls.set} at $path has no partition directory")
-      leaves.flatMap { case (d, consts) =>
-        val partNames = consts.map(_._1).toSet
-        val written = StructType.fromDDL(ls.schemaDdl)
-        val minusPart = StructType(written.fields.filterNot(f => partNames(f.name)))
-        java.nio.file.Files.list(d).iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
-          .sortBy(_.toString)
-          .map(f => LakeFilePartition(f.toString, minusPart.toDDL, c.version,
-            changeType = change,
-            constLongs = consts): InputPartition)
-      }
-    }
-  }
-
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[LakeVersionOffset].version
     val e = end.asInstanceOf[LakeVersionOffset].version
-    val cs = GraftLake.commits(path)
-    val range = cs.slice(s + 1, e + 1)
-    if (cdf) {
-      // CDF mode: appends stream as constant-typed inserts; mutation
-      // commits stream their staged change sidecar (typed column IN
-      // the files); compact/metadata commits carry no logical change.
-      return range.flatMap { c =>
-        c.action match {
-          case "create" | "append" | "copyinto" =>
-            c.add.flatMap(setFiles).map(f => LakeFilePartition(
-              f.toString, c.schemaDdl, c.version,
-              changeType = Some("insert")): InputPartition)
-          case "padd" =>
-            paddPartitions(c, Some("insert"))
-          case "merge" | "update" | "delete" | "tombstone" | "restore" |
-              "updatedv" | "poverwrite" =>
-            val cdfSet = c.cdf.getOrElse(throw new IllegalStateException(
-              s"commit ${c.version} is a ${c.action} with no change-data " +
-                "sidecar (CDF was not enabled when it committed) — " +
-                "restart from a fresh snapshot"))
-            require(java.nio.file.Files.exists(
-              java.nio.file.Paths.get(path, cdfSet)),
-              s"commit ${c.version}'s change-data sidecar was vacuumed " +
-                "(outside the retention window) — restart from a fresh " +
-                "snapshot")
-            val ddl = StructType.fromDDL(c.schemaDdl)
-              .add("_change_type", StringType, nullable = true).toDDL
-            setFiles(cdfSet).map(f =>
-              LakeFilePartition(f.toString, ddl, c.version): InputPartition)
-          // TRUNCATE streams its delete images by reading the REMOVED
-          // sets (Delta's file-level remove); vacuumed sets refuse.
-          case "truncate" =>
-            GraftLake.removedDataSetsAt(path, c.version).flatMap { ls =>
-              val dir = java.nio.file.Paths.get(
-                GraftLake.setPathOf(path, ls.set))
-              require(java.nio.file.Files.exists(dir),
-                s"commit ${c.version}'s truncated set ${ls.set} was " +
-                  "vacuumed — restart from a fresh snapshot")
-              val top = java.nio.file.Files.list(dir).iterator().asScala.toSeq
-                .filter(_.getFileName.toString.endsWith(".parquet"))
-                .sortBy(_.toString)
-              if (top.nonEmpty)
-                top.map(f => LakeFilePartition(f.toString, ls.schemaDdl,
-                  c.version, changeType = Some("delete")): InputPartition)
-              else {
-                // padd set: hive subdirs, partition values as constants
-                GraftLake.hiveLeaves(dir).filter(_._2.nonEmpty)
-                  .flatMap { case (d, consts) =>
-                    val partNames = consts.map(_._1).toSet
-                    val minusPart = StructType(StructType
-                      .fromDDL(ls.schemaDdl).fields
-                      .filterNot(f => partNames(f.name)))
-                    java.nio.file.Files.list(d).iterator().asScala.toSeq
-                      .filter(_.getFileName.toString.endsWith(".parquet"))
-                      .sortBy(_.toString)
-                      .map(f => LakeFilePartition(f.toString,
-                        minusPart.toDDL, c.version,
-                        changeType = Some("delete"),
-                        constLongs = consts): InputPartition)
-                  }
-              }
-            }
-          case "compact" | "constraint" | "rename" | "lineage" | "dropcol" |
-              "evolve" | "vacuum" | "coldef" | "partition" |
-              "txnnoop" => Seq.empty
-          case other => throw new IllegalStateException(
-            s"commit ${c.version} is a $other: not representable in the " +
-              "change stream — restart from a fresh snapshot")
-        }
-      }.toArray
-    }
-    range.find(c => c.action != "create" && c.action != "append" &&
-        c.action != "copyinto" && c.action != "padd" && c.action != "evolve" &&
-        c.action != "constraint" && c.action != "vacuum" &&
-        c.action != "coldef" && c.action != "partition" &&
-        c.action != "txnnoop").foreach { c =>
-      throw new IllegalStateException(
-        s"commit ${c.version} is a ${c.action}: not representable as an " +
-          "insert-only stream — restart from a fresh snapshot")
-    }
-    // Constraint/evolve/vacuum commits carry no rows — empty batches;
-    // an ABORTED cross-table transaction (txnnoop past the stable-
-    // offset stall means it was decided) is a no-op slot, not poison.
-    range.filter(c => c.action != "constraint" && c.action != "evolve" &&
-        c.action != "vacuum" && c.action != "coldef" &&
-        c.action != "partition" && c.action != "txnnoop")
-      .flatMap { c =>
-      // A partitioned append is insert-only too: hive-dir planning.
-      if (c.action == "padd") paddPartitions(c, None)
-      else c.add.flatMap { set =>
-        setFiles(set).map(f =>
-          LakeFilePartition(f.toString, c.schemaDdl, c.version): InputPartition)
+    def parts(sets: Seq[GraftLake.LiveSet], v: Int, change: Option[String]) =
+      sets.flatMap(LakeFilePartition.ofSet(path, _))
+        .map(_.copy(commitVersion = v, changeType = change): InputPartition)
+    GraftLake.commitsFrom(path, s + 1, e).flatMap { c =>
+      GraftLake.feedRows(path, c, cdf, stream = true) match {
+        case GraftLake.FeedInserts(sets) =>
+          parts(sets, c.version, if (cdf) Some("insert") else None)
+        case GraftLake.FeedSidecar(ls) => parts(Seq(ls), c.version, None)
+        case GraftLake.FeedDeletes(sets) => parts(sets, c.version, Some("delete"))
+        case GraftLake.FeedNothing => Seq.empty
       }
     }.toArray
   }
@@ -361,6 +235,29 @@ private[sources] case class LakeFilePartition(
     // merge-on-read leg; empty everywhere else.
     dvSet: String = "",
     dvDirs: Seq[String] = Seq.empty) extends InputPartition
+
+private[sources] object LakeFilePartition {
+  /** One set's part-files (commit version -1). A hive-layout set's
+    * partition columns are encoded in its leaf directory names
+    * (`col=value/`), NOT in the parquet bytes: its files plan under
+    * the set schema minus those columns, whose values are served as
+    * per-partition constants.
+    */
+  def ofSet(table: String, ls: GraftLake.LiveSet): Seq[LakeFilePartition] = {
+    // setPathOf, not a raw join: a SHALLOW CLONE's sets are absolute
+    // paths into the source table
+    val dir = java.nio.file.Paths.get(GraftLake.setPathOf(table, ls.set))
+    GraftLake.hiveLeaves(dir).flatMap { case (d, consts) =>
+      val partNames = consts.map(_._1).toSet
+      val ddl = StructType(StructType.fromDDL(ls.schemaDdl).fields
+        .filterNot(f => partNames(f.name))).toDDL
+      java.nio.file.Files.list(d).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+        .sortBy(_.toString)
+        .map(f => LakeFilePartition(f.toString, ddl, -1, constLongs = consts))
+    }
+  }
+}
 
 private[sources] class LakeFileReaderFactory(
     required: StructType,

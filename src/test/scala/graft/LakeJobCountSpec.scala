@@ -223,8 +223,12 @@ class LakeJobCountSpec extends AnyFunSuite with SparkSpec {
     pin("compactBloom")(GraftLake.compact(spark, pc, Seq("id"), numFiles = 2, Some("id")))
     val pz = bloomSets()
     pin("compactZOrderBloom")(GraftLake.compactZOrder(spark, pz, "id", "v", numFiles = 2))
-    // Both pay the same Bloom sidecar build on top of their plain shape.
+    val pp = bloomSets()
+    pin("compactPartitionedByBloom")(GraftLake.compactPartitionedBy(spark, pp, Seq("m")))
+    // Each pays the same Bloom sidecar build on top of its plain shape.
     assert(JobPins("compactZOrderBloom") - JobPins("compactZOrder") ==
+      JobPins("compactBloom") - JobPins("compact"))
+    assert(JobPins("compactPartitionedByBloom") - JobPins("compactPartitionedBy") ==
       JobPins("compactBloom") - JobPins("compact"))
   }
 
@@ -256,5 +260,6 @@ class LakeJobCountSpec extends AnyFunSuite with SparkSpec {
     "compactZOrder" -> 5,
     "compactPartitionedBy" -> 2,
     "compactBloom" -> 5,
-    "compactZOrderBloom" -> 7)
+    "compactZOrderBloom" -> 7,
+    "compactPartitionedByBloom" -> 4)
 }

@@ -972,6 +972,21 @@ class LakeSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  test("partitioned re-layout keeps Bloom point-lookup skipping, like compact") {
+    import spark.implicits._
+    val path = freshTable()
+    def evens(lo: Long, hi: Long) =
+      (lo to hi by 2).map(i => (i, i * 10, i % 4)).toDF("id", "v", "m")
+    GraftLake.create(evens(2L, 100L), path, Some("id"), bloomCols = Seq("id"))
+    GraftLake.append(evens(102L, 200L), path, Some("id"), bloomCols = Seq("id"))
+    GraftLake.compactPartitioned(spark, path, "m")
+    // 101 is odd, so every re-laid-out set's Bloom rules it out.
+    val (_, scanned, skipped) = GraftLake.readPoint(spark, path, "id", 101L)
+    assert((scanned, skipped) == (0, 2))
+    val (df, _, _) = GraftLake.readPoint(spark, path, "id", 100L)
+    assert(df.filter(col("id") === 100L).count() == 1L)
+  }
+
   test("vacuum reclaims merged-away sets; latest survives, old snapshots don't") {
     val path = freshTable()
     val orders = Tables.orders(spark, sf)

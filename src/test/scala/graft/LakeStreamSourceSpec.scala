@@ -405,4 +405,35 @@ class LakeStreamSourceSpec extends AnyFunSuite with SparkSpec {
     assert(got2 == (1L to 80L).map(i =>
       (i, if (i <= 60) i % 3 + 10 else i % 2 + 10, i * 7)).toSet)
   }
+
+  test("the stream schema ignores a pending transaction's evolved schema") {
+    import spark.implicits._
+    val base = freshBase()
+    val path = base.resolve("t").toString
+    GraftLake.create(Seq((1L, 10L), (2L, 20L)).toDF("id", "v"), path)
+    val appended = new java.util.concurrent.CountDownLatch(1)
+    val inferred = new java.util.concurrent.CountDownLatch(1)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    // Thread A holds a SQL transaction open over an append that adds
+    // a column; the transaction is pending to every other thread.
+    val a = new Thread(() => {
+      GraftLake.sqlTxnBegin()
+      try {
+        GraftLake.append(
+          Seq((3L, 30L, 1L)).toDF("id", "v", "extra"), path)
+        appended.countDown()
+        inferred.await()
+      } catch { case e: Throwable => failure.set(e); appended.countDown() }
+      finally GraftLake.sqlTxnRollback()
+    })
+    a.start()
+    try {
+      assert(appended.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(failure.get == null, s"thread A failed: ${failure.get}")
+      assert(GraftLake.latestStableVersion(path) == 0)
+      val fields = spark.readStream.format("graft-lake-stream")
+        .option("path", path).load().schema.fieldNames.toSeq
+      assert(fields == Seq("id", "v", "_commit_version"))
+    } finally { inferred.countDown(); a.join() }
+  }
 }

@@ -108,6 +108,24 @@ class LakeTxnSpec extends AnyFunSuite with SparkSpec {
     assert(GraftLake.read(spark, b).count() == 15)
   }
 
+  test("a pending transaction's claims outlive later commits: DDL still waits for the decision") {
+    val a = fresh("a9"); val b = fresh("b9")
+    GraftLake.create(mk(10), a)
+    GraftLake.create(mk(10), b)
+    GraftLake.beforeTxnMarkerHook.set(Some(() =>
+      throw new InterruptedException("coordinator died")))
+    intercept[InterruptedException](GraftLake.appendAtomic(Seq(
+      (mk(5, 100), a), (mk(5, 200), b))))
+    val token = GraftLake.lastTxnToken.get
+    GraftLake.append(mk(3, 300), a) // an ordinary commit after the pending one
+    assert(GraftLake.snapshot(a).pendingTxn)
+    intercept[java.util.ConcurrentModificationException](
+      GraftLake.addConstraint(spark, a, "nonneg", "id >= 0"))
+    GraftLake.abortTxn(token)
+    GraftLake.addConstraint(spark, a, "nonneg", "id >= 0")
+    assert(GraftLake.read(spark, a).count() == 13)
+  }
+
   test("a corrupt (empty/garbage) decision marker refuses loudly — never silently not-committed") {
     val a = fresh("a6"); val b = fresh("b6")
     GraftLake.create(mk(10), a)
