@@ -740,10 +740,9 @@ object GraftLake {
         s"overlap incoming ${pcs.mkString("(", ", ", ")")} values without " +
         "an exact per-partition manifest — run compactPartitioned to " +
         "restore the layout first")
-    val cdfSet = stageCdf(path,
-      victims.map(readSet(spark, path, _, target, s.renames))
-        .reduceLeftOption(_.unionByName(_)).map(_ -> "delete").toSeq :+
-        (aligned -> "insert"))
+    val cdfSet = stageCdf(path, Seq(
+      scanSets(spark, path, victims, target, s.renames, s.tombstones) -> "delete",
+      aligned -> "insert"))
     val perSet = stagePartitionedMulti(aligned, path, pcs,
       probeStats, Some(extraPre))
     val v = publishEntry(path, "poverwrite", "", aligned.schema, None,
@@ -864,27 +863,6 @@ object GraftLake {
     }.toSet
   }
 
-  /** Stage `df` hive-partitioned by `partCol` and turn each partition
-    * directory into its own set dir (`data/cXXX/<partCol>=<v>/...` —
-    * the hive subdir stays INSIDE the set, so readers reconstruct the
-    * partition column through the declared schema). Returns the
-    * per-set manifests with exact partition-value stats.
-    */
-  private def stagePartitioned(
-      df: DataFrame, path: String, partCol: String,
-      statsCols: Seq[String]): Seq[LiveSet] =
-    stagePartitionedMulti(df, path, Seq(partCol), statsCols)
-
-  /** Stage one hive-layout write by `partCols` (one distributed
-    * `partitionBy` pass over the TUPLE — never a per-value loop) and
-    * turn every LEAF directory into its own file-set whose manifest
-    * records EVERY layout column as an exact min==max zone map, so
-    * equality on any layout column — not just a prefix — prunes to
-    * the matching sets before any file listing. The nested
-    * `c1=v1/c2=v2` structure moves INTO the set directory intact:
-    * Spark's own partition discovery re-derives the values at read
-    * (the files do not carry the layout columns).
-    */
   /** ONE grouped pass over a partitioned write's input: per
     * partition-tuple extra stats (exactly the image domains the old
     * internal pass recorded), the distinct partition tuples, AND every
@@ -962,6 +940,16 @@ object GraftLake {
     (extra, extra.keySet)
   }
 
+  /** Stage one hive-layout write by `partCols` (one distributed
+    * `partitionBy` pass over the TUPLE — never a per-value loop) and
+    * turn every LEAF directory into its own file-set whose manifest
+    * records EVERY layout column as an exact min==max zone map, so
+    * equality on any layout column — not just a prefix — prunes to
+    * the matching sets before any file listing. The nested
+    * `c1=v1/c2=v2` structure moves INTO the set directory intact:
+    * Spark's own partition discovery re-derives the values at read
+    * (the files do not carry the layout columns).
+    */
   private def stagePartitionedMulti(
       df: DataFrame, path: String, partCols: Seq[String],
       statsCols: Seq[String],
@@ -1595,7 +1583,7 @@ object GraftLake {
     * and travel through clone/restore/time-travel with the directory.
     */
   private def ridMapSidecar(table: String, set: String): Path =
-    Paths.get(setPath(table, set), "_ridmap.json")
+    Paths.get(setPathOf(table, set), "_ridmap.json")
 
   /** Footer record count of a staged set — O(files) metadata reads at
     * WRITE time, no tasks — recorded as the `_ridmap.json` sidecar so
@@ -1625,7 +1613,7 @@ object GraftLake {
   private def footerCounts(
       path: String, setName: String): Seq[(String, Long)] = {
     import scala.jdk.CollectionConverters._
-    Files.walk(Paths.get(setPath(path, setName))).iterator().asScala.toSeq
+    Files.walk(Paths.get(setPathOf(path, setName))).iterator().asScala.toSeq
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .sortBy(_.toString)
       .map { f =>
@@ -1697,7 +1685,7 @@ object GraftLake {
     * manifest stat) + the file's offset within its set (footer counts
     * over name-sorted files — deterministic) + the row's index in its
     * file. Sets without a recorded range serve NULL. Built on
-    * [[visibleWithPositions]], so DV masks and key tombstones apply
+    * [[positionedRows]], so DV masks and key tombstones apply
     * exactly as in [[read]] — a masked row never surfaces, and a
     * surviving row keeps its id through any number of MoR mutations.
     */
@@ -1706,8 +1694,7 @@ object GraftLake {
     val s = snapshot(path)
     require(s.version >= 0, s"no table at $path")
     _lastRidFooterOpens.set(0)
-    val visible = visibleWithPositions(spark, path, s).getOrElse(
-      return read(spark, path).withColumn("_row_id", lit(null).cast("long")))
+    val (_, visible) = positionedRows(spark, path, s)
     // (set, fileName) -> base + in-set offset, tiny and broadcast.
     // Per-file counts come from each set's commit-time `_ridmap`
     // sidecar — O(sets) tiny metadata reads, ZERO parquet opens; the
@@ -1842,7 +1829,7 @@ object GraftLake {
       case s: scala.collection.Seq[_] => s.map(_.toString).toSeq
       case _ => Seq.empty[String]
     }
-    MorMasks.writeTargetsManifest(setPath(path, setName), targets)
+    MorMasks.writeTargetsManifest(setPathOf(path, setName), targets)
     targets
   }
 
@@ -1924,7 +1911,7 @@ object GraftLake {
 
   /** Delete a staged (but unpublished) set directory, if present. */
   private def reclaimStaged(path: String, setName: String): Unit =
-    rmTree(Paths.get(setPath(path, setName)))
+    rmTree(Paths.get(setPathOf(path, setName)))
 
   /** Delete `p` and everything under it, if present. */
   private def rmTree(p: Path): Unit = if (Files.exists(p)) {
@@ -1932,8 +1919,22 @@ object GraftLake {
     Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists)
   }
 
+  /** Rows per `__set` tag ([[CarrySet]]) of `tagged`, tallied per
+    * partition and summed on the driver: ONE job and no shuffle, where
+    * a hash aggregate by set name adds an exchange (and under AQE a
+    * second job). The tally holds one entry per set a task read.
+    */
+  private def tallyBySet(tagged: DataFrame): Map[String, Long] =
+    tagged.select(col("__set")).mapPartitions { rows =>
+      val n = scala.collection.mutable.HashMap.empty[String, Long]
+      rows.foreach(r => n(r.getString(0)) = n.getOrElse(r.getString(0), 0L) + 1L)
+      n.iterator
+    }(org.apache.spark.sql.Encoders.tuple(org.apache.spark.sql.Encoders.STRING,
+      org.apache.spark.sql.Encoders.scalaLong))
+      .collect().groupMapReduce(_._1)(_._2)(_ + _)
+
   /** Candidate-set index column for the fused count+CDF pass: maps the
-    * readSetsBulk `__set` tag to its position in `candidates`.
+    * [[scanSets]] `__set` tag to its position in `candidates`.
     */
   private def setIndexCol(candidates: Seq[LiveSet]): Column =
     candidates.zipWithIndex.foldLeft(lit(-1)) {
@@ -2331,7 +2332,7 @@ object GraftLake {
       spark: SparkSession, path: String,
       refSets: Set[String]): Seq[String] => Boolean =
     newTombs => newTombs.exists(t =>
-      MorMasks.dvTargetSets(setPath(path, t)).exists(refSets))
+      MorMasks.dvTargetSets(setPathOf(path, t)).exists(refSets))
 
   private def fenceFor(
       spark: SparkSession, path: String, refSets: Set[String],
@@ -2643,7 +2644,7 @@ object GraftLake {
         if (snap.pendingMasks.nonEmpty) {
           val rm = removed.toSet
           val heldMask = snap.pendingMasks.filter(t =>
-            MorMasks.dvTargetSets(setPath(path, t)).exists(rm))
+            MorMasks.dvTargetSets(setPathOf(path, t)).exists(rm))
           if (heldMask.nonEmpty)
             throw new java.util.ConcurrentModificationException(
               s"file-set(s) removed by this $action at $path are " +
@@ -3501,8 +3502,7 @@ object GraftLake {
     require(version >= 0 && st.version == version,
       s"version $version not in [0, ${latestVersion(path)}] for $path")
     val target = StructType.fromDDL(st.schemaDdl)
-    assembleSets(spark, path, st.live, target, st.renames, st.tombstones)(
-      emptyFrame(spark, target))
+    scanSets(spark, path, st.live, target, st.renames, st.tombstones)
   }
 
   /** The positional-deletion-vector sidecar schema: (target set,
@@ -3529,7 +3529,7 @@ object GraftLake {
     // per sidecar set on EVERY read of a table with outstanding
     // masks. Unexpected shapes fall back to inference.
     val loaded = ts.map { t =>
-      val dir = setPath(path, t)
+      val dir = setPathOf(path, t)
       val (names, headDt) = MorMasks.sidecarShape(dir)
       if (names.sorted == DvCols.sorted)
         spark.read.schema(StructType(names.map(n => StructField(n,
@@ -3564,7 +3564,7 @@ object GraftLake {
       path: String, ts: Seq[String]): ScanMaskRefs = {
     if (ts.isEmpty) return ScanMaskRefs(Seq.empty, Seq.empty)
     val shaped = ts.map { t =>
-      val dir = setPath(path, t)
+      val dir = setPathOf(path, t)
       (dir, MorMasks.sidecarShape(dir))
     }
     val (dvs, keys) = shaped.partition {
@@ -3598,35 +3598,74 @@ object GraftLake {
     }
   }
 
-  /** Union `sets` under `target`, applying BOTH merge-on-read sidecar
-    * families staged in `tombstones`: positional deletion vectors
-    * mask (file, row-position) pairs inside each set's scan; key
-    * tombstone sets anti-join on their own key column after the
-    * union. Both are small by construction — broadcast joins, and the
-    * no-sidecar common case adds nothing to the plan.
+  /** What [[scanSets]] carries in front of the table columns. */
+  private sealed trait Carry
+  /** The table columns only. */
+  private case object CarryNothing extends Carry
+  /** `__set`: the name of the set each row was read from. */
+  private case object CarrySet extends Carry
+  /** [[DvCols]]: each row's (set, file name, row position) — exactly
+    * what a deletion-vector commit records.
     */
-  private def assembleSets(
+  private case object CarryPositions extends Carry
+
+  /** THE set scanner behind every read and DML match: the VISIBLE rows
+    * of `sets` under `target` (column lineage in `renames`), with both
+    * merge-on-read sidecar families staged in `tombstones` applied and
+    * `carry` in front; a typed empty frame when `sets` is empty.
+    *
+    * PLAN-SIZE CONVERGENCE: same-schema flat `data/<x>` sets read as
+    * ONE multi-path vectorized parquet relation instead of one union
+    * branch per set — Catalyst analysis/planning cost is O(distinct
+    * written schemas), not O(sets), so a 10⁴-set table plans a handful
+    * of scan nodes (the DSv2 batch source's one-relation posture, kept
+    * on the vectorized reader). A bulk row's set name is re-derived
+    * from its file path's penultimate segment. Hive-layout and
+    * clone-absolute sets keep per-set relations — their count is
+    * bounded by layout design.
+    *
+    * Masks: outstanding positional deletion vectors anti-join on the
+    * full (set, file NAME, `_metadata.row_index`) key after the union
+    * — ONE broadcast join however many sets they cover; key tombstones
+    * anti-join on their own key column. Both are small by
+    * construction, and the no-sidecar common case adds nothing to the
+    * plan.
+    */
+  private def scanSets(
       spark: SparkSession, path: String, sets: Seq[LiveSet],
       target: StructType, renames: Map[String, Seq[String]],
-      tombstones: Seq[String])(emptyFallback: => DataFrame): DataFrame = {
+      tombstones: Seq[String], carry: Carry = CarryNothing): DataFrame = {
+    if (sets.isEmpty) return emptyFrame(spark, StructType((carry match {
+      case CarryNothing => Seq.empty
+      case CarrySet => Seq(StructField("__set", StringType))
+      case CarryPositions => StructType.fromDDL(
+        "__dv_set STRING, __dv_file STRING, __dv_pos BIGINT").fields.toSeq
+    }) ++ target.fields))
     val (dv, keys) = loadTombstones(spark, path, tombstones)
-    // PLAN-SIZE CONVERGENCE: same-schema FLAT sets read as ONE
-    // multi-path vectorized parquet relation instead of one union
-    // branch per set — Catalyst analysis/planning cost is O(distinct
-    // schemas), not O(live sets), so a 10⁴-set table plans a handful
-    // of scan nodes (the DSv2 batch source's one-relation posture,
-    // kept on the vectorized reader). Partitioned (hive-dir) sets
-    // keep per-set relations — their count is bounded by layout
-    // design — and any outstanding DV mask forces the per-set path
-    // (the mask joins on the set identity).
-    val df =
-      if (dv.isDefined)
-        sets.map(readSet(spark, path, _, target, renames, dv))
-          .reduceLeftOption(_.unionByName(_)).getOrElse(emptyFallback)
-      else
-        readSetsBulk(spark, path, sets, target, renames)
-          .getOrElse(emptyFallback)
-    applyTombstoneFrames(df, keys)
+    val positions = dv.isDefined || carry == CarryPositions
+    def fileSegment(i: Int): Column = functions.element_at(
+      functions.split(col("_metadata.file_path"), "/"), i)
+    def relation(ddl: String, dirs: Seq[String], setName: Column): DataFrame = {
+      val own = StructType.fromDDL(ddl)
+      val extra =
+        (if (carry == CarrySet) Seq(setName.as("__set")) else Seq.empty) ++
+          (if (!positions) Seq.empty else Seq(setName.as("__dv_set"),
+            fileSegment(-1).as("__dv_file"), col("_metadata.row_index").as("__dv_pos")))
+      projectToTarget(spark.read.schema(own).parquet(dirs: _*), own, target,
+        renames, extra)
+    }
+    val (bulkable, rest) = sets.partition(isBulkableSet(path, _))
+    val all = (bulkable.groupBy(_.schemaDdl).toSeq.sortBy(_._1).map {
+      case (ddl, group) => relation(ddl, group.map(ls => setPathOf(path, ls.set)),
+        functions.concat(lit("data/"), fileSegment(-2)))
+    } ++ rest.map(ls =>
+      relation(ls.schemaDdl, Seq(setPathOf(path, ls.set)), lit(ls.set))))
+      .reduceLeft(_.unionByName(_))
+    val masked = dv.fold(all)(d => all.join(
+      functions.broadcast(d.select(DvCols.map(col): _*)), DvCols, "left_anti"))
+    applyTombstoneFrames(
+      if (positions && carry != CarryPositions) masked.drop(DvCols: _*) else masked,
+      keys)
   }
 
   /** The written-schema → table-schema projection shared by the
@@ -3658,10 +3697,6 @@ object GraftLake {
     }).toIndexedSeq: _*)
   }
 
-  /** Ordinary `data/<x>` flat set with top-level parquet files — the
-    * shape the bulk multi-path relations can absorb (the set identity
-    * is re-derivable from each file path's penultimate segment).
-    */
   /** Is this set a hive-layout (`padd`) set — no top-level parquet,
     * `c=value` subdirectories? For such sets the layout columns'
     * values are served from the DIRECTORY NAMES as per-partition
@@ -3672,7 +3707,7 @@ object GraftLake {
     */
   private[sources] def isHiveLayoutSet(path: String, ls: LiveSet): Boolean = {
     import scala.jdk.CollectionConverters._
-    val d = Paths.get(setPath(path, ls.set))
+    val d = Paths.get(setPathOf(path, ls.set))
     Files.isDirectory(d) && {
       val top = Files.list(d).iterator().asScala.toSeq
       top.nonEmpty &&
@@ -3682,58 +3717,24 @@ object GraftLake {
     }
   }
 
+  /** Ordinary `data/<x>` flat set with top-level parquet files — the
+    * shape the bulk multi-path relations can absorb (the set identity
+    * is re-derivable from each file path's penultimate segment).
+    */
   private def isBulkableSet(path: String, ls: LiveSet): Boolean = {
     import scala.jdk.CollectionConverters._
     ls.set.startsWith("data/") && !ls.set.stripPrefix("data/").contains("/") && {
-      val d = Paths.get(setPath(path, ls.set))
+      val d = Paths.get(setPathOf(path, ls.set))
       Files.isDirectory(d) && Files.list(d).iterator().asScala
         .exists(_.getFileName.toString.endsWith(".parquet"))
     }
   }
 
-  /** Union of `sets` under `target` with plan size O(distinct written
-    * schemas): bulkable sets scan as one multi-path vectorized
-    * relation per schema, the rest (hive layouts, clone-referenced
-    * absolute sets) as per-set relations. `tagCol` additionally
-    * carries each row's SET NAME as a `__set` column (path-derived
-    * for bulk groups) — the shape the per-set count probes aggregate.
-    */
-  private def readSetsBulk(
-      spark: SparkSession, path: String, sets: Seq[LiveSet],
-      target: StructType, renames: Map[String, Seq[String]],
-      tagCol: Boolean = false): Option[DataFrame] = {
-    val (bulkable, rest) = sets.partition(isBulkableSet(path, _))
-    val bulk = bulkable.groupBy(_.schemaDdl).toSeq.sortBy(_._1)
-      .map { case (ddl, group) =>
-        val own = StructType.fromDDL(ddl)
-        val raw = spark.read.schema(own)
-          .parquet(group.map(ls => setPath(path, ls.set)): _*)
-        val extra =
-          if (!tagCol) Seq.empty
-          else Seq(functions.concat(lit("data/"), functions.element_at(
-            functions.split(col("_metadata.file_path"), "/"), -2)).as("__set"))
-        projectToTarget(raw, own, target, renames, extra)
-      }
-    val perSet = rest.map { ls =>
-      val own = StructType.fromDDL(ls.schemaDdl)
-      val raw = spark.read.schema(own).parquet(setPath(path, ls.set))
-      val extra = if (!tagCol) Seq.empty else Seq(lit(ls.set).as("__set"))
-      projectToTarget(raw, own, target, renames, extra)
-    }
-    (bulk ++ perSet).reduceLeftOption(_.unionByName(_))
-  }
-
-  /** One file-set scanned under its own written schema and projected
-    * to `target`, null-filling columns added after it was written.
-    */
   /** Resolve a set name against its table: names are table-relative
     * ("data/cXXX") except in SHALLOW CLONES, whose initial commit
     * references the source's sets by ABSOLUTE path (Delta's shallow-
     * clone absolute-path files). */
   private[sources] def setPathOf(table: String, set: String): String =
-    setPath(table, set)
-
-  private def setPath(table: String, set: String): String =
     if (set.startsWith("/")) set else s"$table/$set"
 
   /** The hive-encoded LEAF directories of a (possibly partitioned)
@@ -3760,10 +3761,6 @@ object GraftLake {
     walk(dir, Seq.empty)
   }
 
-  /** True iff numeric zone-map/span pruning is sound on this type:
-    * byte/short/int/long. Strings are excluded even when all-numeric
-    * (lexicographic min/max can invert after casting).
-    */
   /** Can this column type carry zone-map stats / participate in
     * manifest pruning? Integrals prune in their own value domain;
     * DATE prunes as epoch DAYS and TIMESTAMP as epoch MICROS — both
@@ -3855,33 +3852,6 @@ object GraftLake {
       case _ => false
     }
 
-  private def readSet(
-      spark: SparkSession, path: String, ls: LiveSet,
-      target: StructType,
-      renames: Map[String, Seq[String]] = Map.empty,
-      dv: Option[DataFrame] = None): DataFrame = {
-    val own = StructType.fromDDL(ls.schemaDdl)
-    val raw0 = spark.read.schema(own).parquet(setPath(path, ls.set))
-    // Positional deletion-vector mask: drop this set's (file,
-    // row-position) pairs at scan time — zero data rewritten. The
-    // position is the parquet reader's own `_metadata.row_index`
-    // (stable per file); file identity is the file NAME (unique
-    // within the set directory, table-move-proof).
-    val raw = dv match {
-      case Some(d) =>
-        val m = d.filter(col("__dv_set") === ls.set)
-          .select(col("__dv_file"), col("__dv_pos"))
-        raw0
-          .withColumn("__dv_file", functions.element_at(
-            functions.split(col("_metadata.file_path"), "/"), -1))
-          .withColumn("__dv_pos", col("_metadata.row_index"))
-          .join(functions.broadcast(m),
-            Seq("__dv_file", "__dv_pos"), "left_anti")
-      case None => raw0
-    }
-    projectToTarget(raw, own, target, renames)
-  }
-
   /** The latest snapshot, resolved through the checkpoint fast path —
     * O(log suffix) metadata work, not O(commits).
     */
@@ -3889,8 +3859,7 @@ object GraftLake {
     val s = snapshot(path)
     require(s.version >= 0, s"no table at $path")
     val target = StructType.fromDDL(s.schemaDdl)
-    assembleSets(spark, path, s.live, target, s.renames, s.tombstones)(
-      emptyFrame(spark, target))
+    scanSets(spark, path, s.live, target, s.renames, s.tombstones)
   }
 
   /** A typed frame with no rows. */
@@ -3952,17 +3921,9 @@ object GraftLake {
     val s = snapshot(path)
     require(s.version >= 0, s"no table at $path")
     val target = StructType.fromDDL(s.schemaDdl)
-    val (scan, skip) = s.live.partition { ls =>
-      ranges.forall { case (c, lo, hi) =>
-        ls.statsFor(c) match {
-          case Some(SetStats(_, sLo, sHi, _, _)) => !(sHi < lo || sLo > hi)
-          case None => true // no stats on this dimension — must read
-        }
-      }
-    }
-    val df = assembleSets(spark, path, scan, target, s.renames,
-      s.tombstones)(read(spark, path).limit(0))
-    (df, scan.size, skip.size)
+    val (scan, skip) = pruneSets(path, s.live, ranges)
+    (scanSets(spark, path, scan, target, s.renames, s.tombstones),
+      scan.size, skip.size)
   }
 
   // ------------------------------------------------------- bloom skipping
@@ -3976,7 +3937,7 @@ object GraftLake {
     * interleave across every set's [min, max] span.
     */
   private def bloomSidecar(table: String, set: String, c: String): Path =
-    Paths.get(setPath(table, set), s"_bloom_$c.json")
+    Paths.get(setPathOf(table, set), s"_bloom_$c.json")
 
   /** Bloom columns present on ANY of `sets` — rewrite paths
     * (compact/merge/delete) re-record these on the sets they produce,
@@ -3986,7 +3947,7 @@ object GraftLake {
   private def bloomColsOf(table: String, sets: Seq[String]): Seq[String] = {
     import scala.jdk.CollectionConverters._
     sets.flatMap { set =>
-      val d = Paths.get(setPath(table, set))
+      val d = Paths.get(setPathOf(table, set))
       if (!Files.isDirectory(d)) Seq.empty[String]
       else Files.list(d).iterator().asScala
         .map(_.getFileName.toString)
@@ -4016,7 +3977,7 @@ object GraftLake {
     val blooms = cols.map(c => graft.functions.VectorFunctions.bloomAgg(
       col(c).cast("long"), words))
     sets.indices.map(i => spark.read.schema(schema)
-        .parquet(setPath(table, sets(i)._1)).withColumn("__set", lit(i)))
+        .parquet(setPathOf(table, sets(i)._1)).withColumn("__set", lit(i)))
       .reduce(_.unionByName(_))
       .groupBy("__set").agg(blooms.head, blooms.tail: _*)
       .collect().foreach(r => cols.indices.foreach { j =>
@@ -4070,16 +4031,9 @@ object GraftLake {
     val s = snapshot(path)
     require(s.version >= 0, s"no table at $path")
     val target = StructType.fromDDL(s.schemaDdl)
-    val (scan, skip) = s.live.partition { ls =>
-      readBloomSidecar(path, ls.set, c) match {
-        case Some((words, k)) =>
-          graft.plans.GraftBloom.mightContain(words, k, value)
-        case None => true // no verified bloom — must read
-      }
-    }
-    val df = assembleSets(spark, path, scan, target, s.renames,
-      s.tombstones)(read(spark, path).limit(0))
-    (df, scan.size, skip.size)
+    val (scan, skip) = pruneSets(path, s.live, Seq.empty, Seq((c, Seq(value))))
+    (scanSets(spark, path, scan, target, s.renames, s.tombstones),
+      scan.size, skip.size)
   }
 
   /** What one commit gives a change feed (see [[feedRows]]). */
@@ -4137,7 +4091,7 @@ object GraftLake {
     def refuse(why: String): Nothing = throw new IllegalStateException(
       s"commit ${c.version} is a ${c.action}: $why — $reseed")
     def unlessVacuumed(ls: LiveSet, what: String): LiveSet = {
-      require(Files.exists(Paths.get(setPath(path, ls.set))),
+      require(Files.exists(Paths.get(setPathOf(path, ls.set))),
         s"commit ${c.version}'s $what ${ls.set} was vacuumed (outside " +
           "the retention window) — start the feed from a newer version " +
           s"or $reseed")
@@ -4211,8 +4165,8 @@ object GraftLake {
       spark: SparkSession, path: String, fromVersion: Int): DataFrame =
     changeFeed(spark, path, fromVersion, cdf = true)
 
-  /** The batch change feeds: [[feedRows]] per commit, each set read
-    * through [[readSet]] under the latest schema and column lineage.
+  /** The batch change feeds: [[feedRows]] per commit, its sets read
+    * through [[scanSets]] under the latest schema and column lineage.
     */
   private def changeFeed(
       spark: SparkSession, path: String, fromVersion: Int,
@@ -4222,15 +4176,16 @@ object GraftLake {
       s"fromVersion $fromVersion out of range for ${st.version + 1}-commit log")
     val target = StructType.fromDDL(st.schemaDdl)
     val typed = target.add("_change_type", StringType, nullable = true)
-    def rows(ls: LiveSet, change: String): DataFrame = {
-      val df = readSet(spark, path, ls, target, st.renames)
+    def rows(sets: Seq[LiveSet], change: String): DataFrame = {
+      val df = scanSets(spark, path, sets, target, st.renames, Seq.empty)
       if (cdf) df.withColumn("_change_type", lit(change)) else df
     }
     commitsFrom(path, fromVersion + 1, st.version).flatMap { c =>
       (feedRows(path, c, cdf, stream = false) match {
-        case FeedInserts(sets) => sets.map(rows(_, "insert"))
-        case FeedSidecar(ls) => Seq(readSet(spark, path, ls, typed, st.renames))
-        case FeedDeletes(sets) => sets.map(rows(_, "delete"))
+        case FeedInserts(sets) => Seq(rows(sets, "insert"))
+        case FeedSidecar(ls) =>
+          Seq(scanSets(spark, path, Seq(ls), typed, st.renames, Seq.empty))
+        case FeedDeletes(sets) => Seq(rows(sets, "delete"))
         case FeedNothing => Seq.empty
       }).map(_.withColumn("_commit_version", lit(c.version)))
     }.reduceLeftOption(_.unionByName(_))
@@ -4241,9 +4196,10 @@ object GraftLake {
   // --------------------------------------------------------- DML pipeline
   //
   // Every row-level mutation is ONE pipeline: a front end (snapshot,
-  // manifest pruning), the entry point's match, and one of two
-  // materializers — a COPY-ON-WRITE rewrite ([[cowRewrite]]) or a
-  // DELETION-VECTOR sidecar ([[dvCommit]], [[dvTombstone]]).
+  // manifest pruning), the entry point's match over rows read by the
+  // one set scanner ([[scanSets]]), and one of two materializers — a
+  // COPY-ON-WRITE rewrite ([[cowRewrite]]) or a DELETION-VECTOR sidecar
+  // ([[dvCommit]], [[dvTombstone]]).
 
   /** The snapshot a DML statement runs against, its schema, and
     * `replayed`: the version an exactly-once tag already landed at,
@@ -4411,12 +4367,12 @@ object GraftLake {
     * INTO the sidecar write (guide §1.2), staging the change images
     * (update pre + post exploded, so rows are read once) partitioned by
     * candidate index and reading the counts off the staged footers;
-    * other tables run one count job, a delete's with set totals. The
+    * other tables run one shuffle-free tally job ([[tallyBySet]]). The
     * hit sets then rewrite — except when a delete empties every one:
     * they drop BY REFERENCE, leaving no stat-less empty set to scan in
-    * every later pruned mutation (totals of a CDF delete come from the
-    * `_ridmap` metadata; tombstones are refused, so recorded ==
-    * visible). A NULL predicate never matches. Returns (version,
+    * every later pruned mutation (set totals come from the `_ridmap`
+    * metadata; tombstones are refused, so recorded == visible). A NULL
+    * predicate never matches. Returns (version,
     * rewrittenSets, keptSets, matchedRows); no hit commits nothing.
     */
   private def cowPredicateMutation(
@@ -4430,24 +4386,11 @@ object GraftLake {
     val pred = coalesce(predicate, lit(false))
     val (candidates, _) = cowCandidates(d, predicate, ranges)
     if (candidates.isEmpty) return (s.version, 0, live.size, 0L)
-    val tagged = readSetsBulk(spark, path, candidates, target, s.renames,
-      tagCol = true).get
-    val (matchCounts, totOf, cdfSet): (Map[String, Long], String => Long,
-        Option[String]) =
-      if (!cdfEnabled(path)) {
-        val counted =
-          if (sets.isEmpty) tagged.groupBy(col("__set")).agg(
-            functions.count(lit(1)).as("tot"),
-            coalesce(functions.sum(when(pred, 1L).otherwise(0L)), lit(0L))
-              .as("n"))
-          else tagged.filter(pred).groupBy(col("__set"))
-            .agg(functions.count(lit(1)).as("n"))
-        val counts = counted.collect()
-          .map(r => r.getString(0) -> (r.getLong(1), r.getLong(r.length - 1)))
-          .toMap
-        (counts.map { case (k, (_, n)) => k -> n },
-          (set: String) => counts(set)._1, None)
-      } else {
+    val tagged = scanSets(spark, path, candidates, target, s.renames,
+      s.tombstones, CarrySet)
+    val (matchCounts, cdfSet): (Map[String, Long], Option[String]) =
+      if (!cdfEnabled(path)) (tallyBySet(tagged.filter(pred)), None)
+      else {
         val setName = s"cdf/c${java.util.UUID.randomUUID().toString.take(12)}"
         val stage = Paths.get(path,
           s"_stage_c${java.util.UUID.randomUUID().toString.take(12)}")
@@ -4471,22 +4414,23 @@ object GraftLake {
               }: _*)).as("__r"))
               .select(col("__si"), col("__r.*"))
         }).write.partitionBy("__si").parquet(stage.toString)
-        val perIdx = flattenStagedCdf(stage, Paths.get(setPath(path, setName)))
+        val perIdx = flattenStagedCdf(stage, Paths.get(setPathOf(path, setName)))
         val mc = perIdx.map { case (i, n) => candidates(i).set -> n / images.size }
         if (!mc.values.exists(_ > 0L)) reclaimStaged(path, setName) // no-hit: no commit
-        (mc, setRecordCount(path, _), Some(setName))
+        (mc, Some(setName))
       }
     val hitSets = candidates.filter(ls => matchCounts.getOrElse(ls.set, 0L) > 0)
     val matched = matchCounts.values.sum
     if (hitSets.isEmpty) return (s.version, 0, live.size, 0L)
-    if (sets.isEmpty && hitSets.forall(ls => totOf(ls.set) == matchCounts(ls.set))) {
+    if (sets.isEmpty &&
+        hitSets.forall(ls => setRecordCount(path, ls.set) == matchCounts(ls.set))) {
       val v = publishEntry(path, "delete", "", new StructType(), None,
         Seq.empty, hitSets.map(_.set), cdfSet = cdfSet,
         fence = fenceFor(spark, path, hitSets.map(_.set).toSet,
           s.tombstones))
       return (v, hitSets.size, live.size - hitSets.size, matched)
     }
-    val hitDf = readSetsBulk(spark, path, hitSets, target, s.renames).get
+    val hitDf = scanSets(spark, path, hitSets, target, s.renames, s.tombstones)
     val v = sets match {
       case None =>
         cowRewrite(d, "delete", hitDf.filter(!pred), hitSets, statsCol.toSeq,
@@ -4501,11 +4445,13 @@ object GraftLake {
   /** Deletion-vector front: the VISIBLE rows matching `predicate`, with
     * positions, checkpointed with their count; None when none match.
     */
-  private def dvMatches(d: DmlScope, predicate: Column): Option[(DataFrame, Long)] =
-    visibleWithPositions(d.spark, d.path, d.s,
+  private def dvMatches(d: DmlScope, predicate: Column): Option[(DataFrame, Long)] = {
+    val (scanned, visible) = positionedRows(d.spark, d.path, d.s,
       predicateConstraints(predicate, d.target, d.s.generated))
-      .map(v => checkpointWithCount(v.filter(coalesce(predicate, lit(false)))))
+    Option.when(scanned.nonEmpty)(
+      checkpointWithCount(visible.filter(coalesce(predicate, lit(false)))))
       .filter(_._2 > 0L)
+  }
 
   /** Deletion-vector materializer: ONE atomic `updatedv` commit of a
     * position sidecar masking `masked` (old images' positions) and one
@@ -4584,8 +4530,8 @@ object GraftLake {
     val (uLo, uHi) = span.span.get
     val (hit, kept) = pruneSets(path, s.live, Seq((statsCol, uLo, uHi)))
     val alignedUpdates = alignUpdates(updates, target, "merge")
-    val hitDf = hit.map(readSet(spark, path, _, target, s.renames))
-      .reduceLeftOption(_.unionByName(_))
+    val hitDf = Option.when(hit.nonEmpty)(
+      scanSets(spark, path, hit, target, s.renames, s.tombstones))
     val ukeys = updates.select(keyCols.map(col): _*).distinct()
     // CDF sidecar, computed against the PRE-merge hit sets (soundness
     // contract: matched targets can only live in hit sets, so matched
@@ -4661,12 +4607,12 @@ object GraftLake {
     // Only span-overlapping sets can hold matched targets (the
     // statsCol contract) — everything else never scans.
     val (uLo, uHi) = span.span.get
-    val visible = visibleWithPositions(spark, path, s,
+    val (scanned, visible) = positionedRows(spark, path, s,
       (Seq((statsCol, uLo, uHi)), Seq.empty))
     // The matched slice, ONE resolution reused everywhere: positions
     // for the sidecar, pre-images for CDF, keys for insert splitting.
-    val (m, nMatched) = visible
-      .map(v => checkpointWithCount(v.join(ukeys, keyCols, "left_semi")))
+    val (m, nMatched) = Option.when(scanned.nonEmpty)(
+        checkpointWithCount(visible.join(ukeys, keyCols, "left_semi")))
       .filter(_._2 > 0L).getOrElse {
         // Pure insert: a plain append commit — no empty sidecar to drag
         // through the tombstone lifecycle.
@@ -4959,18 +4905,15 @@ object GraftLake {
         }
       }
     val rewriteTarget = bySource.nonEmpty || matched.nonEmpty
-    val scanSets = if (bySource.nonEmpty) live else spanSurvivors
-    val rewriteSets = if (rewriteTarget) scanSets else Seq.empty
-    val scanDf = scanSets.map(readSet(spark, path, _, target, s.renames))
-      .reduceLeftOption(_.unionByName(_))
-    refuseAmbiguousMatches(source, keyCols)(dupKeys => scanDf.exists(df =>
-      df.select(keyCols.map(col): _*)
-        .join(dupKeys, keyCols, "left_semi").head(1).nonEmpty))
-    val emptyTarget = emptyFrame(spark, target)
-    val j = mergeJoin(scanDf.getOrElse(emptyTarget), target.fieldNames.toSeq,
-      source, keyCols)
+    val scanned = if (bySource.nonEmpty) live else spanSurvivors
+    val rewriteSets = if (rewriteTarget) scanned else Seq.empty
+    val scanDf = scanSets(spark, path, scanned, target, s.renames, s.tombstones)
+    refuseAmbiguousMatches(source, keyCols)(dupKeys => scanned.nonEmpty &&
+      scanDf.select(keyCols.map(col): _*)
+        .join(dupKeys, keyCols, "left_semi").head(1).nonEmpty)
+    val j = mergeJoin(scanDf, target.fieldNames.toSeq, source, keyCols)
     val survivors =
-      if (!rewriteTarget) emptyTarget
+      if (!rewriteTarget) emptyFrame(spark, target)
       else j.filter(disp.tEx && disp.survives).select(disp.survivorCols: _*)
     val inserts = j.filter(disp.insPred).select(disp.insertCols: _*)
     val tCols = target.fields.toIndexedSeq.map(f => col(s"t.${f.name}").as(f.name))
@@ -5027,10 +4970,7 @@ object GraftLake {
       .map { case (lo, hi) => (statsCol, lo, hi) }
     // Position-prefixed visible slice (empty-but-typed when no live
     // set survives pruning — inserts must still dispatch).
-    val visible = visibleWithPositions(spark, path, s, (ranges, Seq.empty)).getOrElse(
-      emptyFrame(spark, StructType(StructType.fromDDL(
-          "__dv_set STRING, __dv_file STRING, __dv_pos BIGINT").fields ++
-          target.fields)))
+    val (_, visible) = positionedRows(spark, path, s, (ranges, Seq.empty))
     // The t struct carries the position triple for the sidecar.
     val j = mergeJoin(visible, DvCols ++ target.fieldNames.toSeq, source, keyCols)
     refuseAmbiguousMatches(source, keyCols)(dupKeys =>
@@ -5136,7 +5076,7 @@ object GraftLake {
     * rows where `predicate` is TRUE — O(deleted rows) positions
     * written, ZERO data bytes rewritten, no key column required.
     * Readers mask the positions at scan time (a broadcast anti-join
-    * on `_metadata.row_index` inside [[readSet]] — DVs are small by
+    * on `_metadata.row_index` inside [[scanSets]] — DVs are small by
     * construction); [[compact]] materializes and clears them.
     *
     * Semantics vs key tombstones: a DV suppresses ONLY the physical
@@ -5503,13 +5443,12 @@ object GraftLake {
     }
   }
 
-  /** Every VISIBLE row of snapshot `s` with its physical position
-    * identity (`__dv_set`/`__dv_file`/`__dv_pos`) prepended to the
-    * logical columns: outstanding DVs mask inside each set's scan, key
-    * tombstones anti-join after the union, so only rows a reader would
-    * serve can match — which keeps CDF single-reported and position
-    * sidecars minimal. The triple is exactly what a deletion-vector
-    * commit records. None when no live set survives pruning.
+  /** Deletion-vector front end: the live sets of `s` that may hold a
+    * row satisfying `cons` (recorded in [[lastDvScanSets]]) and their
+    * VISIBLE rows with the position triple (`__dv_set`/`__dv_file`/
+    * `__dv_pos`, exactly what a deletion-vector commit records) in
+    * front — only rows a reader would serve can match, which keeps CDF
+    * single-reported and position sidecars minimal.
     *
     * `cons` (ranges + equality value lists implied by the caller's
     * predicate) skips live sets that provably hold no matching row —
@@ -5519,55 +5458,14 @@ object GraftLake {
     * even when every set spans the full key range. Sets lacking
     * stats/sidecars on a constrained column are read conservatively.
     */
-  private def visibleWithPositions(
+  private def positionedRows(
       spark: SparkSession, path: String, s: Snapshot,
       cons: (Seq[(String, Long, Long)], Seq[(String, Seq[Long])]) =
-        (Seq.empty, Seq.empty)): Option[DataFrame] = {
-    val target = StructType.fromDDL(s.schemaDdl)
-    val (dv, keyTs) = loadTombstones(spark, path, s.tombstones)
-    val (scanSets, skipSets) = pruneSets(path, s.live, cons._1, cons._2)
-    _lastDvScanSets.set((scanSets.size, skipSets.size))
-    def projectWithPos(raw: DataFrame, own: StructType, setCol: Column): DataFrame =
-      projectToTarget(raw, own, target, s.renames,
-        Seq(setCol.as("__dv_set"), col("__dv_file"), col("__dv_pos")))
-    def filePos(level: Int): Column = functions.element_at(
-      functions.split(col("_metadata.file_path"), "/"), level)
-    def withPos(raw: DataFrame): DataFrame = raw
-      .withColumn("__dv_file", filePos(-1))
-      .withColumn("__dv_pos", col("_metadata.row_index"))
-    // Same plan-size convergence as the plain read: same-schema
-    // ordinary "data/<set>" FLAT sets scan as ONE multi-path relation
-    // — the set identity is re-derived from the file path (penultimate
-    // segment) and the DV mask anti-joins on the full (set, file, pos)
-    // key instead of a per-set filter. Hive sets, clone-referenced
-    // absolute sets, and odd layouts keep per-set relations.
-    val (bulkable, rest) = scanSets.partition(isBulkableSet(path, _))
-    val bulk = bulkable.groupBy(_.schemaDdl).toSeq.sortBy(_._1)
-      .map { case (ddl, group) =>
-        val own = StructType.fromDDL(ddl)
-        val raw0 = withPos(spark.read.schema(own)
-          .parquet(group.map(ls => setPath(path, ls.set)): _*))
-        val named = raw0.withColumn("__dv_set",
-          functions.concat(lit("data/"), filePos(-2)))
-        val masked = dv.fold(named)(d => named.join(
-          functions.broadcast(d.select(DvCols.map(col): _*)), DvCols, "left_anti"))
-        projectWithPos(masked, own, col("__dv_set"))
-      }
-    val perSet = rest.map { ls =>
-      val own = StructType.fromDDL(ls.schemaDdl)
-      val raw0 = withPos(spark.read.schema(own).parquet(setPath(path, ls.set)))
-      val masked = dv match {
-        case Some(d) =>
-          val m = d.filter(col("__dv_set") === ls.set)
-            .select(col("__dv_file"), col("__dv_pos"))
-          raw0.join(functions.broadcast(m),
-            Seq("__dv_file", "__dv_pos"), "left_anti")
-        case None => raw0
-      }
-      projectWithPos(masked, own, lit(ls.set))
-    }
-    (bulk ++ perSet).reduceLeftOption(_.unionByName(_))
-      .map(applyTombstoneFrames(_, keyTs))
+        (Seq.empty, Seq.empty)): (Seq[LiveSet], DataFrame) = {
+    val (scan, skip) = pruneSets(path, s.live, cons._1, cons._2)
+    _lastDvScanSets.set((scan.size, skip.size))
+    (scan, scanSets(spark, path, scan, StructType.fromDDL(s.schemaDdl),
+      s.renames, s.tombstones, CarryPositions))
   }
 
   /** MERGE-ON-READ UPDATE via deletion vectors — `UPDATE ... SET ...
@@ -5644,21 +5542,15 @@ object GraftLake {
     // their outside-range remainder.
     val (inside, straddle) = candidates.partition(ls =>
       ls.statsFor(c).exists(st => st.min >= lo && st.max <= hi))
-    def readAll(sets: Seq[LiveSet]): Option[DataFrame] =
-      sets.map(readSet(spark, path, _, target, s.renames))
-        .reduceLeftOption(_.unionByName(_))
-    val straddleDf = readAll(straddle)
+    def scan(sets: Seq[LiveSet]): DataFrame =
+      scanSets(spark, path, sets, target, s.renames, s.tombstones)
+    val straddleIn = scan(straddle).filter(coalesce(inRange, lit(false)))
     val replaced = inside.map(ls => setRecordCount(path, ls.set)).sum +
-      straddleDf.map(_.filter(coalesce(inRange, lit(false))).count())
-        .getOrElse(0L)
+      (if (straddle.isEmpty) 0L else straddleIn.count())
     val aligned = alignTo(df, target)
     val cdfSet = stageCdf(path, Seq(
-      ((readAll(inside).toSeq ++
-        straddleDf.map(_.filter(coalesce(inRange, lit(false)))).toSeq)
-        .reduceLeftOption(_.unionByName(_)).getOrElse(aligned.limit(0)), "delete"),
-      (aligned, "insert")))
-    val remainder = straddleDf.map(_.filter(!coalesce(inRange, lit(false))))
-      .getOrElse(aligned.limit(0))
+      (scan(inside).unionByName(straddleIn), "delete"), (aligned, "insert")))
+    val remainder = scan(straddle).filter(!coalesce(inRange, lit(false)))
     val v = cowRewrite(d, "merge", remainder.unionByName(aligned), candidates,
       Seq(c), cdfSet)
     (v, candidates.size, kept.size, replaced)
@@ -5759,18 +5651,14 @@ object GraftLake {
       !bloomed.contains(ls.set) || bloomHits(ls.set))
     _lastDeleteKeysShortlist.set(shortlist.map(_.set))
     if (shortlist.isEmpty) return (s.version, 0, live.size, 0L)
-    // ONE relation per distinct schema, ONE hash agg by set name —
-    // O(schemas) plan however long the shortlist.
-    val tagged = readSetsBulk(spark, path, shortlist, target, s.renames,
-        tagCol = true).get
-      .join(k, Seq(keyCol), "left_semi")
-      .groupBy(functions.col("__set"))
-      .agg(org.apache.spark.sql.functions.count(lit(1)).as("n"))
-    val matchCounts = tagged.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    // ONE relation per distinct schema, ONE shuffle-free tally by set
+    // name — O(schemas) plan however long the shortlist.
+    val matchCounts = tallyBySet(scanSets(spark, path, shortlist, target,
+      s.renames, s.tombstones, CarrySet).join(k, Seq(keyCol), "left_semi"))
     val hitSets = shortlist.filter(ls => matchCounts.getOrElse(ls.set, 0L) > 0)
     val deleted = matchCounts.values.sum
     if (hitSets.isEmpty) return (s.version, 0, live.size, 0L)
-    val hitDf = readSetsBulk(spark, path, hitSets, target, s.renames).get
+    val hitDf = scanSets(spark, path, hitSets, target, s.renames, s.tombstones)
     val cdfSet = stageCdf(path, Seq((hitDf.join(k, Seq(keyCol), "left_semi"), "delete")))
     val v = cowRewrite(d, "delete", hitDf.join(k, Seq(keyCol), "left_anti"),
       hitSets, statsCol.toSeq, cdfSet, tag)
@@ -5922,8 +5810,8 @@ object GraftLake {
       partCols: Seq[String] = Seq.empty)(layout: DataFrame => DataFrame): Int = {
     import d.{s, spark, path}
     require(sets.nonEmpty, s"nothing to compact at $path")
-    val rows = layout(assembleSets(spark, path, sets, d.target, s.renames,
-      s.tombstones)(emptyFrame(spark, d.target)))
+    val rows = layout(scanSets(spark, path, sets, d.target, s.renames,
+      s.tombstones))
     if (partCols.isEmpty)
       return cowRewrite(d, "compact", rows, sets, statsCols,
         materialized = s.tombstones)
@@ -5972,7 +5860,7 @@ object GraftLake {
     require(target.tombstones.isEmpty && cur.tombstones.isEmpty,
       s"outstanding merge-on-read tombstones at $path: compact first")
     def targetSetsExist(): Unit = target.live.foreach { ls =>
-      require(Files.exists(Paths.get(setPath(path, ls.set))),
+      require(Files.exists(Paths.get(setPathOf(path, ls.set))),
         s"cannot restore $path to v$version: file-set ${ls.set} was " +
           "vacuumed — that history is gone")
     }
@@ -5985,10 +5873,8 @@ object GraftLake {
     // (expectVersion) separately aborts if the vacuum's audit commit
     // lands before ours.
     val cdfSet = try {
-      val restoredDf = {
-        val t = StructType.fromDDL(target.schemaDdl)
-        readSetsBulk(spark, path, target.live, t, Map.empty).get
-      }
+      val restoredDf = scanSets(spark, path, target.live,
+        StructType.fromDDL(target.schemaDdl), Map.empty, target.tombstones)
       enforceConstraints(restoredDf, cur.constraints)
       if (!cdfEnabled(path)) None
       else {

@@ -46,7 +46,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    optimizer prunes streaming scans too).
   *  - SCHEMA EVOLUTION: each file-set decodes under its own written
   *    schema; columns added by later commits null-fill, exactly like
-  *    the batch `readSet` path. The stream's schema is the table's as
+  *    the batch `GraftLake.scanSets` path. The stream's schema is the table's as
   *    of its latest stable version.
   *  - CONTRACT: insert-only by default, typed change rows with
   *    `option("cdf", "true")`; what each commit serves in either mode

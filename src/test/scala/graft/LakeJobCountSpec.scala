@@ -235,12 +235,12 @@ class LakeJobCountSpec extends AnyFunSuite with SparkSpec {
   /** Jobs per call, measured on local[4] with the shapes above. */
   private val JobPins: Map[String, Int] = Map(
     "merge" -> 5,
-    "sqlDeleteIn" -> 9,
-    "update" -> 3,
+    "sqlDeleteIn" -> 8,
+    "update" -> 2,
     "updateCdf" -> 2,
-    "delete" -> 3,
+    "delete" -> 2,
     "deleteCdf" -> 2,
-    "deleteRangeEmptied" -> 2,
+    "deleteRangeEmptied" -> 1,
     "mergeDv" -> 12,
     "mergeDvCdf" -> 15,
     "mergeDvInsert" -> 3,
@@ -251,7 +251,7 @@ class LakeJobCountSpec extends AnyFunSuite with SparkSpec {
     "mergeActions" -> 8,
     "mergeActionsDv" -> 11,
     "mergeActionsDvDelete" -> 10,
-    "deleteKeys" -> 9,
+    "deleteKeys" -> 8,
     "replaceWhere" -> 4,
     "replaceWhereInside" -> 2,
     "replaceWhereInsideBoth" -> 2,

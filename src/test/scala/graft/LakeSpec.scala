@@ -1412,5 +1412,33 @@ class LakeSpec extends AnyFunSuite with SparkSpec {
       s"two written schemas must plan TWO scan relations, got ${scans2.size}")
     assert(df2.count() == 32)
     assert(df2.filter(col("tag").isNull).count() == 31)
+    // outstanding deletion vectors keep one relation per schema: the
+    // mask is one (set, file, pos) anti-join, not one join per set.
+    // optimizedPlan, not executedPlan: AQE hides the physical scans.
+    val pd = freshTable()
+    GraftLake.create(Seq((0L, 0L)).toDF("id", "v"), pd, Some("id"))
+    (1 to 30).foreach(i => GraftLake.append(
+      Seq((i.toLong, i.toLong)).toDF("id", "v"), pd, Some("id")))
+    val (_, nDel) = GraftLake.deleteDv(spark, pd, expr("id % 2 = 0"))
+    assert(nDel == 16)
+    assert(GraftLake.lastDvScanSets == ((31, 0)))
+    val (pruned, scanned, skipped) =
+      GraftLake.readPruned(spark, pd, Seq(("id", 0L, 30L)))
+    assert(scanned == 31 && skipped == 0)
+    Seq("read" -> GraftLake.read(spark, pd),
+        "readAt" -> GraftLake.readAt(spark, pd, GraftLake.latestVersion(pd)),
+        "readPruned" -> pruned).foreach { case (what, dvDf) =>
+      val dataScans = dvDf.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.LogicalRelation
+            if !r.output.exists(_.name == "__dv_pos") => r
+      }
+      assert(dataScans.size == 1,
+        s"$what of 31 DV-masked same-schema sets must plan ONE data " +
+          s"relation, got ${dataScans.size}")
+      assert(dvDf.count() == 15, what)
+      assert(dvDf.filter(expr("id % 2 = 0")).count() == 0, what)
+      assert(dvDf.agg(sum(col("v"))).head.getLong(0) ==
+        (1 to 29 by 2).map(_.toLong).sum, what)
+    }
   }
 }
